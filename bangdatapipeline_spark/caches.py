@@ -13,11 +13,24 @@ well within budget — observed on the 249-query sf0.1 sweep in a
 default-heap session (graph_triangles' 33 MiB AQE auto-broadcast was
 the straw, not the cause).
 
+The memo rule. Every shared session substrate (graph edge caches,
+adjacency arrays, ANN query broadcasts) is built by a ``(spark,
+sf_dir)`` function decorated with :func:`memo`, which keys on
+``(session_key(spark), sf_dir)`` and returns the SAME object on every
+hit — plan identity is what lets CacheManager reuse a cached relation.
+``session_key`` is the context's ``applicationId``, never the session
+object's ``id()`` (its docstring says why). A builder derives every
+input from ``(spark, sf_dir)`` itself, so the key covers everything the
+result depends on.
+
 The engine cannot raise ``spark.driver.memory`` on an externally built
 session (static config), so being a bounded-memory citizen is its only
 lever: ``release(spark)`` drops every cached relation in the session
-and resets the engine's memo registries so the next query re-caches
-fresh. Hosts that run many engine queries back-to-back should call it
+and empties every memo so the next query re-caches fresh. It drops
+references only — nothing is destroyed — so a DataFrame the engine
+returned before a release still runs after it (uncached); Spark's
+ContextCleaner reclaims a broadcast's blocks once no live plan holds
+it. Hosts that run many engine queries back-to-back should call it
 periodically (the bundled sweep harness does, every
 ``RELEASE_EVERY`` queries); single-query or bench hosts never need to.
 
@@ -29,10 +42,15 @@ never calls this leaks cluster storage just as surely.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import SparkSession
 
 # Suggested cadence for hosts that run the full registry in one session.
 RELEASE_EVERY = 40
+
+# "module.qualname" of each memoized builder -> its memo dict.
+_MEMOS: dict[str, dict] = {}
 
 
 def session_key(spark: SparkSession) -> str:
@@ -48,6 +66,23 @@ def session_key(spark: SparkSession) -> str:
     context-level broadcasts/scans is correct.
     """
     return spark.sparkContext.applicationId
+
+
+def memo(build):
+    """Memoize a ``build(spark, sf_dir)`` substrate builder per
+    ``(session_key(spark), sf_dir)`` and register its dict for
+    :func:`release`."""
+    cache: dict = {}
+    _MEMOS[f"{build.__module__}.{build.__qualname__}"] = cache
+
+    @functools.wraps(build)
+    def get(spark: SparkSession, sf_dir: str):
+        key = (session_key(spark), sf_dir)
+        if key not in cache:
+            cache[key] = build(spark, sf_dir)
+        return cache[key]
+
+    return get
 
 
 def load_green_hashes(root: str) -> dict[str, str]:
@@ -74,38 +109,21 @@ def load_green_hashes(root: str) -> dict[str, str]:
 
 
 def release(spark: SparkSession) -> None:
-    """Unpersist everything the engine cached in ``spark`` and reset the
-    memo registries that hand out cached plans.
+    """Unpersist everything the engine cached in ``spark`` and empty every
+    :func:`memo`.
 
     ``clearCache()`` empties the session's CacheManager — both the
     storage blocks and the registry entries — so DataFrames memoized by
     the engine would otherwise silently run *uncached* afterwards;
-    clearing the memo dicts too means the next call path re-caches.
-    Plain plan memos (``tables._df_cache`` holds lazy scans, no blocks)
-    are kept: they cost nothing to hold and save the per-query
-    file-listing job.
+    emptying the memos too means the next call path re-caches.
+    DataFrames already returned stay runnable: broadcasts are dropped,
+    not destroyed (module docstring). Plain plan memos
+    (``tables._df_cache`` holds lazy scans, no blocks) are kept: they
+    cost nothing to hold and save the per-query file-listing job.
     """
     spark.catalog.clearCache()
-    from bangdatapipeline_spark.operators import graph_analytics as ga
-
-    for memo in (
-        ga._graph_cache,
-        ga._op_cache,
-        ga._oriented_cache,
-        ga._adj_cache,
-        ga._lpa_cache,
-    ):
-        memo.clear()
-
-    from bangdatapipeline_spark.operators import similarity as sim
-
-    for memo in (sim._rerank_bq_cache, sim._query_bq_cache, sim._pq_lut_cache):
-        for bc in memo.values():
-            try:
-                bc.destroy()
-            except Exception:
-                pass  # session already stopped; blocks died with it
-        memo.clear()
+    for cache in _MEMOS.values():
+        cache.clear()
 
 
 def free_heap_fraction(spark: SparkSession) -> float:

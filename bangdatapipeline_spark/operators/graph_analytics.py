@@ -32,7 +32,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from bangdatapipeline_spark.registry import register
-from bangdatapipeline_spark.caches import session_key
+from bangdatapipeline_spark.caches import memo
 from bangdatapipeline_spark.tables import load_table
 
 
@@ -273,9 +273,6 @@ def text_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PAGERANK_ITERS = 3
 _DAMPING = 0.85
 
-# (session id, sf_dir) -> (cached contribution edges, initial ranks, |V| df).
-_graph_cache: dict[tuple[str, str], tuple[DataFrame, DataFrame, DataFrame]] = {}
-
 
 def _node_label() -> "F.Column":
     """Integer node id -> display label under _trade_contrib's encoding
@@ -290,6 +287,7 @@ def _node_label() -> "F.Column":
     ).otherwise(F.concat(F.lit("s"), F.expr("(node - 1) div 2")))
 
 
+@memo
 def _trade_contrib(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -300,12 +298,7 @@ def _trade_contrib(
     crossJoin(broadcast(...)), the repo-wide pattern, so building the
     graph triggers no driver-side action. Shared by ``graph_pagerank``
     and ``graph_kcore`` — the edge build (join + distinct over the fact
-    table) is the expensive part and is paid once per session, the memo
-    pattern of ``tables.load_table``."""
-    key = (session_key(spark), sf_dir)
-    cached = _graph_cache.get(key)
-    if cached is not None:
-        return cached
+    table) is the expensive part and is paid once per session."""
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     e0 = (
@@ -358,9 +351,7 @@ def _trade_contrib(
             (F.lit(1.0) / F.col("n_nodes")).alias("r"),
         )
     )
-    cached = (contrib_src, init, n_df)
-    _graph_cache[key] = cached
-    return cached
+    return contrib_src, init, n_df
 
 
 def _pagerank_oracle() -> str:
@@ -619,130 +610,100 @@ def events_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Triangle counting on the part co-purchase graph
 # --------------------------------------------------------------------------
 
-# (session id, sf_dir) -> cached distinct (order, part) projection —
-# shared by graph_triangles and graph_basket_lift (same memo pattern as
-# _trade_contrib; the fact-table scan + distinct is the shared cost).
-_op_cache: dict[tuple[str, str], DataFrame] = {}
-
-
+@memo
 def _order_part(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (session_key(spark), sf_dir)
-    cached = _op_cache.get(key)
-    if cached is None:
-        li = load_table(spark, sf_dir, "lineitem")
-        # r13 (guide §2.4 "two operations keyed the same way share one
-        # exchange"): the cache is hash-partitioned by o BEFORE the
-        # distinct — HashPartitioning(o) satisfies the (o, p) aggregate's
-        # clustering requirement, so the distinct runs partition-local on
-        # 32 tasks (previously its partial agg was fused into the
-        # single-task scan), and every consumer's per-order self-join
-        # (_oriented_copurchase's edge build, graph_basket_lift's pair
-        # count) reads both sides already co-partitioned on o — zero
-        # join exchanges where each run previously paid two.
-        n = max(8, spark.sparkContext.defaultParallelism)
-        cached = (
-            li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
-            .repartition(n, "o")
-            .distinct()
-            .cache()
-        )
-        _op_cache[key] = cached
-    return cached
+    """Cached distinct (order, part) projection — shared by
+    graph_triangles and graph_basket_lift (the fact-table scan +
+    distinct is the shared cost)."""
+    li = load_table(spark, sf_dir, "lineitem")
+    # r13 (guide §2.4 "two operations keyed the same way share one
+    # exchange"): the cache is hash-partitioned by o BEFORE the
+    # distinct — HashPartitioning(o) satisfies the (o, p) aggregate's
+    # clustering requirement, so the distinct runs partition-local on
+    # 32 tasks (previously its partial agg was fused into the
+    # single-task scan), and every consumer's per-order self-join
+    # (_oriented_copurchase's edge build, graph_basket_lift's pair
+    # count) reads both sides already co-partitioned on o — zero
+    # join exchanges where each run previously paid two.
+    n = max(8, spark.sparkContext.defaultParallelism)
+    return (
+        li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
+        .repartition(n, "o")
+        .distinct()
+        .cache()
+    )
 
 
-# (session id, sf_dir) -> (cached oriented edge list, degree table, edges).
-_oriented_cache: dict[tuple[str, str], tuple[DataFrame, DataFrame, DataFrame]] = {}
-
-# (session id, sf_dir) -> cached adjacency arrays, keyed by orientation.
-# Cached separately from the edge list because the collect_list groupBy is
-# its own shuffle + array build (~1.5 s per materialization at sf0.1) and
-# two broadcast subtrees would otherwise each recompute it.
-_adj_cache: dict[tuple[str, str, str], DataFrame] = {}
-
-
+@memo
 def _out_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-node sorted ORIENTED out-neighbor arrays (src -> [dst...])."""
-    key = (session_key(spark), sf_dir, "out")
-    cached = _adj_cache.get(key)
-    if cached is None:
-        oriented, _, _ = _oriented_copurchase(spark, sf_dir)
-        cached = (
-            oriented.groupBy("src")
-            .agg(F.sort_array(F.collect_list("dst")).alias("nbrs"))
-            .cache()
-        )
-        _adj_cache[key] = cached
-    return cached
+    """Per-node sorted ORIENTED out-neighbor arrays (src -> [dst...]).
+    The adjacency arrays are cached separately from the edge list
+    because the collect_list groupBy is its own shuffle + array build
+    (~1.5 s per materialization at sf0.1) and two broadcast subtrees
+    would otherwise each recompute it."""
+    oriented, _, _ = _oriented_copurchase(spark, sf_dir)
+    return (
+        oriented.groupBy("src")
+        .agg(F.sort_array(F.collect_list("dst")).alias("nbrs"))
+        .cache()
+    )
 
 
+@memo
 def _in_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-node ORIENTED in-neighbor arrays (dst -> [src...]), memoized
-    per (session, sf_dir) — the mirror of ``_out_adjacency`` for
-    supersteps that aggregate onto the RECEIVING endpoint
-    (graph_hits_counts' a-steps). Unsorted: its only consumer folds an
-    order-independent BIGINT sum over the array."""
-    key = (session_key(spark), sf_dir, "in")
-    cached = _adj_cache.get(key)
-    if cached is None:
-        oriented, _, _ = _oriented_copurchase(spark, sf_dir)
-        cached = (
-            oriented.groupBy("dst")
-            .agg(F.collect_list("src").alias("nbrs"))
-            .cache()
-        )
-        _adj_cache[key] = cached
-    return cached
+    """Per-node ORIENTED in-neighbor arrays (dst -> [src...]) — the
+    mirror of ``_out_adjacency`` for supersteps that aggregate onto the
+    RECEIVING endpoint (graph_hits_counts' a-steps). Unsorted: its only
+    consumer folds an order-independent BIGINT sum over the array."""
+    oriented, _, _ = _oriented_copurchase(spark, sf_dir)
+    return (
+        oriented.groupBy("dst")
+        .agg(F.collect_list("src").alias("nbrs"))
+        .cache()
+    )
 
 
+@memo
 def _und_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-node sorted UNDIRECTED neighbor-set arrays (u -> [v...]),
-    memoized per (session, sf_dir). graph_neighbor_minhash reads this
-    table from FOUR subtrees (two band-join sides, two verify
-    broadcasts); uncached, each evaluation re-ran the doubled-edge
-    groupBy/collect_set shuffle — the dominant cost of that operator,
-    paid ~4x per call before this memo (r9 review finding)."""
-    key = (session_key(spark), sf_dir, "und")
-    cached = _adj_cache.get(key)
-    if cached is None:
-        _oriented, _deg, edges = _oriented_copurchase(spark, sf_dir)
-        und = edges.select(F.col("pa").alias("u"), F.col("pb").alias("v")).unionAll(
-            edges.select(F.col("pb").alias("u"), F.col("pa").alias("v"))
-        )
-        cached = (
-            und.groupBy("u")
-            .agg(F.sort_array(F.collect_set("v")).alias("nbrs"))
-            .cache()
-        )
-        _adj_cache[key] = cached
-    return cached
+    """Per-node sorted UNDIRECTED neighbor-set arrays (u -> [v...]).
+    graph_neighbor_minhash reads this table from FOUR subtrees (two
+    band-join sides, two verify broadcasts); uncached, each evaluation
+    re-ran the doubled-edge groupBy/collect_set shuffle — the dominant
+    cost of that operator, paid ~4x per call before this memo (r9 review
+    finding)."""
+    _oriented, _deg, edges = _oriented_copurchase(spark, sf_dir)
+    und = edges.select(F.col("pa").alias("u"), F.col("pb").alias("v")).unionAll(
+        edges.select(F.col("pb").alias("u"), F.col("pa").alias("v"))
+    )
+    return (
+        und.groupBy("u")
+        .agg(F.sort_array(F.collect_set("v")).alias("nbrs"))
+        .cache()
+    )
 
 
+@memo
 def _triangle_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row per DAG triangle (u, v, w): each oriented edge (u, v)
-    closed by every w in N+(u) ∩ N+(v), memoized per (session, sf_dir).
-    Shared by ``graph_neighbor_jaccard`` and ``graph_adamic_adar`` —
-    before this memo each op built and cached its own copy of the
-    identical |triangles|-row relation (r9 review finding). The
-    adjacency joins are size-gated (broadcast under the gate, shuffled
-    sort-merge above it — the 100 TB path)."""
-    key = (session_key(spark), sf_dir, "tris")
-    cached = _adj_cache.get(key)
-    if cached is None:
-        oriented, _deg, _edges = _oriented_copurchase(spark, sf_dir)
-        adj = _out_adjacency(spark, sf_dir)
-        au = adj.select(F.col("src").alias("u"), F.col("nbrs").alias("nbrs_u"))
-        av = adj.select(F.col("src").alias("v"), F.col("nbrs").alias("nbrs_v"))
-        cached = (
-            oriented.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-            .join(_size_gated_broadcast(au), "u")
-            .join(_size_gated_broadcast(av), "v")
-            .select(
-                "u", "v", F.explode(F.array_intersect("nbrs_u", "nbrs_v")).alias("w")
-            )
-            .cache()
+    closed by every w in N+(u) ∩ N+(v). Shared by
+    ``graph_neighbor_jaccard`` and ``graph_adamic_adar`` — before this
+    memo each op built and cached its own copy of the identical
+    |triangles|-row relation (r9 review finding). The adjacency joins
+    are size-gated (broadcast under the gate, shuffled sort-merge above
+    it — the 100 TB path)."""
+    oriented, _deg, _edges = _oriented_copurchase(spark, sf_dir)
+    adj = _out_adjacency(spark, sf_dir)
+    au = adj.select(F.col("src").alias("u"), F.col("nbrs").alias("nbrs_u"))
+    av = adj.select(F.col("src").alias("v"), F.col("nbrs").alias("nbrs_v"))
+    return (
+        oriented.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+        .join(_size_gated_broadcast(au), "u")
+        .join(_size_gated_broadcast(av), "v")
+        .select(
+            "u", "v", F.explode(F.array_intersect("nbrs_u", "nbrs_v")).alias("w")
         )
-        _adj_cache[key] = cached
-    return cached
+        .cache()
+    )
 
 
 def _triangle_edge_legs(tris, with_third: bool = False) -> DataFrame:
@@ -779,60 +740,54 @@ def _ranked_topk(scored: DataFrame, *order_cols) -> DataFrame:
     return top.withColumn("rk", F.row_number().over(w).cast("int"))
 
 
+@memo
 def _oriented_copurchase(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Degree-oriented co-purchase edge list, memoized per (session,
-    sf_dir): returning the SAME cached DataFrame object (not a per-call
-    rebuilt plan) pins the InMemoryRelation so repeated runs reuse it
-    deterministically instead of racing cache resolution/eviction."""
-    key = (session_key(spark), sf_dir)
-    cached = _oriented_cache.get(key)
-    if cached is None:
-        op = _order_part(spark, sf_dir)
-        a = op.select("o", F.col("p").alias("pa"))
-        b = op.select("o", F.col("p").alias("pb"))
-        # edges and deg are cached too (r9 review): they are returned to
-        # consumers that broadcast them (graph_neighbor_jaccard's da/db,
-        # graph_triangles' scalar counts) or re-derive adjacency from them
-        # (_und_adjacency) — uncached, each such subtree re-ran the o x o
-        # self-join + distinct shuffle per evaluation.
-        edges = (
-            a.join(b, "o")
-            .filter(F.col("pa") < F.col("pb"))
-            .select("pa", "pb")
-            .distinct()
-            .cache()
-        )
-        # r13 (the _triangle_edge_legs r12 trick applied here): ONE scan
-        # of the edge cache + explode instead of a two-branch union that
-        # scanned it twice per materialization; same (node, d) multiset.
-        deg = (
-            edges.select(F.explode(F.array("pa", "pb")).alias("node"))
-            .groupBy("node")
-            .agg(F.count("*").alias("d"))
-            .cache()
-        )
-        da = deg.select(F.col("node").alias("pa"), F.col("d").alias("d_a"))
-        db = deg.select(F.col("node").alias("pb"), F.col("d").alias("d_b"))
-        ed = edges.join(F.broadcast(da), "pa").join(F.broadcast(db), "pb")
-        fwd = (F.col("d_a") < F.col("d_b")) | (
-            (F.col("d_a") == F.col("d_b")) & (F.col("pa") < F.col("pb"))
-        )
-        # r13 (same §2.4 layout rule as _trade_contrib): the oriented
-        # cache is hash-partitioned by src — _out_adjacency's collect_list
-        # groupBy(src) and the HITS h-step groupBy(src) then run
-        # partition-local off the cached layout (each previously paid its
-        # own |E|-row exchange per materialization), and triangle_rows'
-        # src-keyed adjacency join reads the big side already distributed.
-        n_parts = max(8, spark.sparkContext.defaultParallelism // 4)
-        oriented = ed.select(
-            F.when(fwd, F.col("pa")).otherwise(F.col("pb")).alias("src"),
-            F.when(fwd, F.col("pb")).otherwise(F.col("pa")).alias("dst"),
-        ).repartition(n_parts, "src").cache()
-        cached = (oriented, deg, edges)
-        _oriented_cache[key] = cached
-    return cached
+    """(degree-oriented co-purchase edge list, degree table, undirected
+    edges), each cached."""
+    op = _order_part(spark, sf_dir)
+    a = op.select("o", F.col("p").alias("pa"))
+    b = op.select("o", F.col("p").alias("pb"))
+    # edges and deg are cached too (r9 review): they are returned to
+    # consumers that broadcast them (graph_neighbor_jaccard's da/db,
+    # graph_triangles' scalar counts) or re-derive adjacency from them
+    # (_und_adjacency) — uncached, each such subtree re-ran the o x o
+    # self-join + distinct shuffle per evaluation.
+    edges = (
+        a.join(b, "o")
+        .filter(F.col("pa") < F.col("pb"))
+        .select("pa", "pb")
+        .distinct()
+        .cache()
+    )
+    # r13 (the _triangle_edge_legs r12 trick applied here): ONE scan
+    # of the edge cache + explode instead of a two-branch union that
+    # scanned it twice per materialization; same (node, d) multiset.
+    deg = (
+        edges.select(F.explode(F.array("pa", "pb")).alias("node"))
+        .groupBy("node")
+        .agg(F.count("*").alias("d"))
+        .cache()
+    )
+    da = deg.select(F.col("node").alias("pa"), F.col("d").alias("d_a"))
+    db = deg.select(F.col("node").alias("pb"), F.col("d").alias("d_b"))
+    ed = edges.join(F.broadcast(da), "pa").join(F.broadcast(db), "pb")
+    fwd = (F.col("d_a") < F.col("d_b")) | (
+        (F.col("d_a") == F.col("d_b")) & (F.col("pa") < F.col("pb"))
+    )
+    # r13 (same §2.4 layout rule as _trade_contrib): the oriented
+    # cache is hash-partitioned by src — _out_adjacency's collect_list
+    # groupBy(src) and the HITS h-step groupBy(src) then run
+    # partition-local off the cached layout (each previously paid its
+    # own |E|-row exchange per materialization), and triangle_rows'
+    # src-keyed adjacency join reads the big side already distributed.
+    n_parts = max(8, spark.sparkContext.defaultParallelism // 4)
+    oriented = ed.select(
+        F.when(fwd, F.col("pa")).otherwise(F.col("pb")).alias("src"),
+        F.when(fwd, F.col("pb")).otherwise(F.col("pa")).alias("dst"),
+    ).repartition(n_parts, "src").cache()
+    return oriented, deg, edges
 
 
 _TRIANGLES_ORACLE = """
@@ -1327,19 +1282,12 @@ GROUP BY 1
 """
 
 
-# (session id, sf_dir) -> cached per-node LPA labels (the rounds are
-# deterministic, so the cached result is identical to a rebuild; both
-# LPA-consuming queries then skip the round joins).
-_lpa_cache: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
+@memo
 def _lpa_labels(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(per-node LPA labels after _LPA_ROUNDS synchronous rounds, doubled
-    edge list) — shared by graph_label_propagation and graph_modularity."""
-    key = (session_key(spark), sf_dir)
-    cached = _lpa_cache.get(key)
-    if cached is not None:
-        return cached
+    edge list) — shared by graph_label_propagation and graph_modularity.
+    The rounds are deterministic, so the cached labels are identical to
+    a rebuild; both consumers then skip the round joins."""
     contrib, _init, _n = _trade_contrib(spark, sf_dir)
     edges = contrib.select("src", "dst")
     # node set straight off the cached edges (not the rank-init vector —
@@ -1367,9 +1315,7 @@ def _lpa_labels(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]
             .filter(F.col("rn") == 1)
             .select("node", "lab")
         )
-    labels = labels.cache()
-    _lpa_cache[key] = (labels, edges)
-    return labels, edges
+    return labels.cache(), edges
 
 
 @register("graph_label_propagation", oracle=_lpa_oracle())

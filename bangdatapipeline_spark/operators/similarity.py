@@ -35,7 +35,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
-from bangdatapipeline_spark.caches import session_key
+from bangdatapipeline_spark.caches import memo
 from bangdatapipeline_spark.registry import REGISTRY, register
 from bangdatapipeline_spark.tables import load_table, spread
 
@@ -648,34 +648,26 @@ def knn_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, sf_dir) -> broadcast of the bounded query side as
-# (q_ids int64[nq], Q float64[nq x d], labels[nq]). Memoized for two
-# reasons (VERDICT r12 task 4): (a) every kernel call previously paid a
-# driver-side toPandas of the query rows at plan-construction time, and
-# (b) a FRESH broadcast per call is serialized into the mapInPandas
-# function bytes, making each call's canonicalized plan unique — which
-# defeats CacheManager plan-identity reuse for any cached consumer of a
-# kernel output (the r12 MMR rejection root-caused exactly this).
-# Cleared (broadcasts destroyed) by caches.release, like
-# _rerank_bq_cache below.
-_query_bq_cache: dict = {}
-
-
-def _query_matrix_broadcast(spark: SparkSession, e: DataFrame, sf_dir: str):
-    key = (session_key(spark), sf_dir)
-    bq = _query_bq_cache.get(key)
-    if bq is None:
-        q_pdf = (
-            e.filter(F.col("vec_id") < N_QUERIES)
-            .select("vec_id", "label", "embedding")
-            .toPandas()
-        )
-        q_ids = q_pdf["vec_id"].to_numpy()
-        qm = np.vstack(q_pdf["embedding"].to_numpy()).astype(np.float64)
-        labels = q_pdf["label"].to_numpy()
-        bq = spark.sparkContext.broadcast((q_ids, qm, labels))
-        _query_bq_cache[key] = bq
-    return bq
+@memo
+def _query_matrix_broadcast(spark: SparkSession, sf_dir: str):
+    """Broadcast of the bounded query side as (q_ids int64[nq],
+    Q float64[nq x d], labels[nq]). Memoized for two reasons (VERDICT
+    r12 task 4): (a) every kernel call previously paid a driver-side
+    toPandas of the query rows at plan-construction time, and (b) a
+    FRESH broadcast per call is serialized into the mapInPandas function
+    bytes, making each call's canonicalized plan unique — which defeats
+    CacheManager plan-identity reuse for any cached consumer of a kernel
+    output (the r12 MMR rejection root-caused exactly this)."""
+    q_pdf = (
+        load_table(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id") < N_QUERIES)
+        .select("vec_id", "label", "embedding")
+        .toPandas()
+    )
+    q_ids = q_pdf["vec_id"].to_numpy()
+    qm = np.vstack(q_pdf["embedding"].to_numpy()).astype(np.float64)
+    labels = q_pdf["label"].to_numpy()
+    return spark.sparkContext.broadcast((q_ids, qm, labels))
 
 
 def _fold_rerank_candidates(
@@ -712,7 +704,7 @@ def _fold_rerank_candidates(
     ``extra``: schema fragment ("col type, ...") of carried-through
     candidate columns (e.g. the curve's min_cr).
     """
-    bq = _query_matrix_broadcast(spark, e, sf_dir)
+    bq = _query_matrix_broadcast(spark, sf_dir)
     extra_cols = [f.split()[0] for f in extra.split(",") if f.strip()]
     schema = "q_id long, n_id long, sim double" + (
         ", " + extra if extra else ""
@@ -794,8 +786,8 @@ def _gemm_topk_candidates(
     # r13 (VERDICT r12 task 4): the query side comes from the memoized
     # per-(session, sf_dir) broadcast — no per-call toPandas at plan
     # construction, and the pickled kernel bytes stay identical across
-    # calls (stable canonicalized plan; see _query_bq_cache).
-    bq = _query_matrix_broadcast(spark, e, sf_dir)
+    # calls (stable canonicalized plan; see _query_matrix_broadcast).
+    bq = _query_matrix_broadcast(spark, sf_dir)
     use_mask = label_mask
 
     def block_topk(batches):
@@ -1640,33 +1632,61 @@ FROM sims QUALIFY rn <= {TOP_K}
 """
 
 
-# (applicationId, sf_dir) -> broadcast (q_ids, LUT[nq x subs x codes]) of
-# the per-query ADC lookup table (the `dot` of every (query, subspace,
-# code) cell). Data-derived, so building it runs one bounded Spark job at
-# first construction (query-side filter pushes down; the centroid build
-# is the only corpus-wide part). Cleared by caches.release.
-_pq_lut_cache: dict = {}
-
-
-def _pq_query_lut(spark: SparkSession, scored: DataFrame, sf_dir: str):
-    key = (session_key(spark), sf_dir)
-    bq = _pq_lut_cache.get(key)
-    if bq is None:
-        pdf = (
-            scored.filter(F.col("vec_id") < N_QUERIES)
-            .select("vec_id", "s", "code", "dot")
-            .toPandas()
+def _pq_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, s, code, dot, score) for every (vector, subspace, code):
+    the exact subvector · centroid dot and its rounded argmin-L2 score.
+    Feeds both the corpus code assignment and the query-side ADC LUT."""
+    e = load_table(spark, sf_dir, "embeddings")
+    x = (
+        e.select("vec_id", "label", F.posexplode("embedding").alias("i", "val"))
+        .select(
+            "vec_id",
+            "label",
+            (F.col("i") / _PQ_SUBDIM).cast("int").alias("s"),
+            (F.col("i") % _PQ_SUBDIM).alias("j"),
+            F.col("val").cast("double").alias("val"),
         )
-        q_ids = np.sort(pdf["vec_id"].unique())
-        n_codes = int(pdf["code"].max()) + 1
-        lut = np.zeros((len(q_ids), _PQ_SUBS, n_codes))
-        qpos = np.searchsorted(q_ids, pdf["vec_id"].to_numpy())
-        lut[qpos, pdf["s"].to_numpy(), pdf["code"].to_numpy()] = pdf[
-            "dot"
-        ].to_numpy()
-        bq = spark.sparkContext.broadcast((q_ids, lut))
-        _pq_lut_cache[key] = bq
-    return bq
+    )
+    cent = x.groupBy(F.col("label").alias("code"), "s", "j").agg(
+        F.avg("val").alias("c")
+    )
+    c2 = cent.groupBy("code", "s").agg(F.sum(F.col("c") * F.col("c")).alias("c2"))
+    dots = (
+        x.join(F.broadcast(cent), ["s", "j"])
+        .groupBy("vec_id", "s", "code")
+        .agg(F.sum(F.col("val") * F.col("c")).alias("dot"))
+    )
+    # r12 note: pinning scored (it feeds both the corpus code assignment
+    # and the query-side ADC LUT) was measured a wash at sf0.1 (A/B med
+    # 1.96 vs 2.09 s) — the scoring subtree is cheap next to the windows
+    # — so the pin is deliberately NOT applied.
+    return dots.join(F.broadcast(c2), ["code", "s"]).select(
+        "vec_id", "s", "code", "dot",
+        F.round(F.col("dot") - F.col("c2") / 2, 6).alias("score"),
+    )
+
+
+@memo
+def _pq_query_lut(spark: SparkSession, sf_dir: str):
+    """Broadcast (q_ids, LUT[nq x subs x codes]) of the per-query ADC
+    lookup table (the `dot` of every (query, subspace, code) cell).
+    Data-derived, so building it runs one bounded Spark job at first
+    construction (query-side filter pushes down; the centroid build is
+    the only corpus-wide part)."""
+    pdf = (
+        _pq_scored(spark, sf_dir)
+        .filter(F.col("vec_id") < N_QUERIES)
+        .select("vec_id", "s", "code", "dot")
+        .toPandas()
+    )
+    q_ids = np.sort(pdf["vec_id"].unique())
+    n_codes = int(pdf["code"].max()) + 1
+    lut = np.zeros((len(q_ids), _PQ_SUBS, n_codes))
+    qpos = np.searchsorted(q_ids, pdf["vec_id"].to_numpy())
+    lut[qpos, pdf["s"].to_numpy(), pdf["code"].to_numpy()] = pdf[
+        "dot"
+    ].to_numpy()
+    return spark.sparkContext.broadcast((q_ids, lut))
 
 
 @register("knn_pq_topk", oracle=_PQ_ORACLE)
@@ -1692,34 +1712,7 @@ def knn_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector itself, the entire point of PQ — and the per-query LUT join
     replaces any vector math at query time.
     """
-    e = load_table(spark, sf_dir, "embeddings")
-    x = (
-        e.select("vec_id", "label", F.posexplode("embedding").alias("i", "val"))
-        .select(
-            "vec_id",
-            "label",
-            (F.col("i") / _PQ_SUBDIM).cast("int").alias("s"),
-            (F.col("i") % _PQ_SUBDIM).alias("j"),
-            F.col("val").cast("double").alias("val"),
-        )
-    )
-    cent = x.groupBy(F.col("label").alias("code"), "s", "j").agg(
-        F.avg("val").alias("c")
-    )
-    c2 = cent.groupBy("code", "s").agg(F.sum(F.col("c") * F.col("c")).alias("c2"))
-    dots = (
-        x.join(F.broadcast(cent), ["s", "j"])
-        .groupBy("vec_id", "s", "code")
-        .agg(F.sum(F.col("val") * F.col("c")).alias("dot"))
-    )
-    # r12 note: pinning scored (it feeds both the corpus code assignment
-    # and the query-side ADC LUT) was measured a wash at sf0.1 (A/B med
-    # 1.96 vs 2.09 s) — the scoring subtree is cheap next to the windows
-    # — so the pin is deliberately NOT applied.
-    scored = dots.join(F.broadcast(c2), ["code", "s"]).select(
-        "vec_id", "s", "code", "dot",
-        F.round(F.col("dot") - F.col("c2") / 2, 6).alias("score"),
-    )
+    scored = _pq_scored(spark, sf_dir)
     w_code = Window.partitionBy("vec_id", "s").orderBy(
         F.col("score").desc(), F.col("code").asc()
     )
@@ -1741,7 +1734,7 @@ def knn_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so every possible global top-k row (rounded-desc, n_id-asc order)
     # survives the cut and the window sees a candidate set bounded by
     # ~k x nq x n_blocks instead of nq x |corpus|.
-    lut_bq = _pq_query_lut(spark, scored, sf_dir)
+    lut_bq = _pq_query_lut(spark, sf_dir)
 
     def adc_topk(batches):
         q_ids, lut = lut_bq.value  # lut: nq x subs x codes
@@ -2924,11 +2917,15 @@ def emb_quantize_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 RERANK_POOL = 25  # stage-1 candidates per query, reranked exactly to TOP_K
 
-# (applicationId, sf_dir) -> Broadcast of the int8 query matrix; destroyed
-# and cleared by caches.release so long sessions don't accumulate blocks.
-# Keyed on applicationId (caches.session_key), NOT the session object's id(): address reuse
-# after a GC'd session could alias a stale broadcast across sessions.
-_rerank_bq_cache: dict = {}
+
+@memo
+def _rerank_query_broadcast(spark: SparkSession, sf_dir: str):
+    """The int8 query-matrix broadcast of ``knn_rerank_two_stage``,
+    memoized so repeated invocations in one session do not accumulate a
+    fresh driver+executor broadcast per call."""
+    e = load_table(spark, sf_dir, "embeddings")
+    return _int8_query_broadcast(spark, _int8_quantized(e))
+
 
 _RERANK_ORACLE = f"""
 WITH {_duck_int8_cte()},
@@ -2981,15 +2978,7 @@ def knn_rerank_two_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load_table(spark, sf_dir, "embeddings")
     q = _int8_quantized(e)
-    # memoized per (session, sf_dir): a fresh sparkContext.broadcast per
-    # invocation would accumulate driver+executor blocks across repeated
-    # bench/correctness rounds in one session (caches.release destroys
-    # these and clears the memo)
-    memo_key = (session_key(spark), sf_dir)
-    bq = _rerank_bq_cache.get(memo_key)
-    if bq is None:
-        bq = _int8_query_broadcast(spark, q)
-        _rerank_bq_cache[memo_key] = bq
+    bq = _rerank_query_broadcast(spark, sf_dir)
     pool_k = RERANK_POOL
 
     cand = q.mapInPandas(

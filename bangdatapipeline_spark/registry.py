@@ -151,6 +151,9 @@ def _walk_fingerprint(fn, seen: set[str], parts: list[str]) -> None:
     to ``parts``. Deterministic: sorted name iteration + a seen-set."""
     import inspect
 
+    # a functools.wraps wrapper (caches.memo) carries the wrapped
+    # function's ident but its own code and globals: walk the real one.
+    fn = inspect.unwrap(fn)
     ident = f"{getattr(fn, '__module__', '?')}.{getattr(fn, '__qualname__', '?')}"
     if ident in seen:
         return

@@ -16,21 +16,103 @@ def _n_cached(spark) -> int:
     return 0 if jcm.isEmpty() else 1
 
 
+def _memo(name: str) -> dict:
+    return caches._MEMOS[f"{ga.__name__}.{name}"]
+
+
 def test_release_drops_blocks_and_memos(spark):
     before = ga.graph_triangles(spark, SMOKE_SF_DIR).collect()
-    assert ga._op_cache and ga._oriented_cache  # memoized by the run
+    assert _memo("_order_part") and _memo("_oriented_copurchase")  # memoized
     assert _n_cached(spark) == 1  # CacheManager holds engine relations
 
     caches.release(spark)
     assert _n_cached(spark) == 0
-    assert not ga._op_cache
-    assert not ga._oriented_cache
-    assert not ga._adj_cache
+    assert not any(caches._MEMOS.values())
 
     # operators keep working and re-memoize after a release
     after = ga.graph_triangles(spark, SMOKE_SF_DIR).collect()
     assert after == before
-    assert ga._op_cache and _n_cached(spark) == 1
+    assert _memo("_order_part") and _n_cached(spark) == 1
+
+
+def test_operator_memos_go_through_caches_memo():
+    """No operator module keeps a hand-rolled module-level memo dict
+    (``_x_cache = {}``): every substrate memo is a ``caches.memo``, so
+    ``caches.release`` reaches it without naming it."""
+    import ast
+    import glob
+    import os
+
+    ops = os.path.join(os.path.dirname(ga.__file__), "*.py")
+    offenders = []
+    for path in sorted(glob.glob(ops)):
+        for node in ast.parse(open(path).read()).body:
+            if isinstance(node, ast.Assign):
+                targets, value = node.targets, node.value
+            elif isinstance(node, ast.AnnAssign):
+                targets, value = [node.target], node.value
+            else:
+                continue
+            for t in targets:
+                if (
+                    isinstance(t, ast.Name)
+                    and t.id.startswith("_")
+                    and t.id.endswith("_cache")
+                    and isinstance(value, ast.Dict)
+                    and not value.keys
+                ):
+                    offenders.append(f"{os.path.basename(path)}:{t.id}")
+    assert offenders == [], offenders
+
+
+def test_release_keeps_returned_frames_runnable(spark):
+    """A DataFrame the engine returned before ``caches.release`` still
+    runs after it, with the same rows — the kNN kernels capture memoized
+    query broadcasts, which release therefore drops rather than
+    destroys. Dropping must not leak either: once the frames are gone,
+    the ContextCleaner reclaims the dropped broadcasts' blocks."""
+    import gc
+    import time
+
+    from pyspark.broadcast import Broadcast
+
+    from bangdatapipeline_spark.registry import load_all
+
+    registry = load_all()
+    keys = ("knn_gemm_topk", "knn_pq_topk", "knn_rerank_two_stage", "graph_pagerank")
+    frames = {k: registry[k].fn(spark, SMOKE_SF_DIR) for k in keys}
+    before = {k: sorted(df.collect()) for k, df in frames.items()}
+    bc_ids = [
+        bc._jbroadcast.id()
+        for m in caches._MEMOS.values()
+        for (_, sf_dir), bc in m.items()
+        if sf_dir == SMOKE_SF_DIR and isinstance(bc, Broadcast)
+    ]
+    assert len(bc_ids) == 3, bc_ids  # query matrix, PQ LUT, int8 queries
+
+    caches.release(spark)
+    for k, df in frames.items():
+        assert sorted(df.collect()) == before[k], k
+
+    bm = spark.sparkContext._jsc.sc().env().blockManager()
+    block_id = spark._jvm.org.apache.spark.storage.BroadcastBlockId
+
+    def live():
+        return [i for i in bc_ids if bm.getStatus(block_id(i, "piece0")).isDefined()]
+
+    assert live() == bc_ids
+    del frames, df
+    # ContextCleaner reclamation is asynchronous: bounded poll, re-forcing
+    # both GCs each probe (the test_checkpoint_blocks_are_gc_reclaimed
+    # pattern).
+    deadline = time.monotonic() + 30
+    while True:
+        gc.collect()
+        spark._jvm.System.gc()
+        if not live() or time.monotonic() > deadline:
+            break
+        time.sleep(1)
+    assert live() == []
 
 
 def test_release_if_pressured_threshold(spark):

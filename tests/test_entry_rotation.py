@@ -102,6 +102,11 @@ def test_query_hash_covers_transitive_helpers_and_constants():
 
     pr = fingerprint_material(registry["graph_pagerank"])
     assert inspect.getsource(ga._trade_contrib) in pr
+    # memoized builders are walked through their caches.memo wrapper:
+    # the wrapped function's own callees stay inside the material
+    from bangdatapipeline_spark import tables
+
+    assert inspect.getsource(tables.load_table) in pr
     assert inspect.getsource(ga._node_label) in pr
     assert "_PAGERANK_ITERS=3" in pr
     # list/dict-valued constants must move the hash too (r10 review: a
