@@ -309,8 +309,18 @@ def _trade_contrib(
         )
         .distinct()
     )
-    edges = e0.unionByName(
-        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    # both directions from ONE e0 reference: separate references pick up
+    # different inferred isnotnull filters, so exchange reuse misses and
+    # the build scans, joins and de-duplicates lineitem twice. Filters
+    # inferred on generated columns stay above the generator, so edges
+    # and deg share one (reused) e0 exchange over one lineitem scan.
+    edges = e0.select(
+        F.inline(
+            F.array(
+                F.struct("src", "dst"),
+                F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
+            )
+        )
     )
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         (1.0 / F.count("*")).alias("w")

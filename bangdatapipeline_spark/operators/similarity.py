@@ -1592,6 +1592,7 @@ def knn_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _PQ_SUBS = 4
 _PQ_SUBDIM = EMB_DIM // _PQ_SUBS
+_PQ_CODES = 10  # codebook domain: one centroid per label, label in 0..9
 
 
 _PQ_ORACLE = f"""
@@ -1680,8 +1681,9 @@ def _pq_query_lut(spark: SparkSession, sf_dir: str):
         .toPandas()
     )
     q_ids = np.sort(pdf["vec_id"].unique())
-    n_codes = int(pdf["code"].max()) + 1
-    lut = np.zeros((len(q_ids), _PQ_SUBS, n_codes))
+    # sized from the codebook domain, not the codes these rows happen to
+    # show: the kernel indexes it with CORPUS codes
+    lut = np.zeros((len(q_ids), _PQ_SUBS, _PQ_CODES))
     qpos = np.searchsorted(q_ids, pdf["vec_id"].to_numpy())
     lut[qpos, pdf["s"].to_numpy(), pdf["code"].to_numpy()] = pdf[
         "dot"

@@ -30,6 +30,20 @@ O(changed-data) operation instead of O(table):
     latest-wins upserts + tombstone deletes, and rewrites ONLY those
     buckets; untouched buckets' files carry over by reference.
 
+A merge runs two Spark actions plus the commit, and persists nothing:
+
+  1. the touched buckets, from the RAW changelog keys (latest-wins keeps
+     one row per key, so the compacted key set is the raw one);
+  2. the write: the touched buckets' rows LEFT ANTI JOIN the raw
+     changelog keys, UNION the changelog's latest row per key minus the
+     deletes, repartitioned by bucket. The latest-wins window is the
+     plan's only window over the changelog. The planner picks the
+     anti-join: a broadcast of a small changelog's keys leaves the table
+     side unshuffled until the write; a large changelog sort-merges.
+
+Reads pass the schema pinned by the CREATE commit to the parquet scan,
+so no read pays a schema-inference job.
+
 Idempotent replay — the property the streaming sinks' ``v{batch_id}``
 contract approximates — is exact here: a merge carries an ``(app_id,
 version)`` stamp, and re-running a merge whose version is already
@@ -51,7 +65,7 @@ import os
 import uuid
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 
 _LOG_DIR = "_txn_log"
 _DATA_DIR = "data"
@@ -173,11 +187,19 @@ class TxnTable:
         self,
         entries: list[dict] | None = None,
         at_version: int | None = None,
+        commits: list[dict] | None = None,
     ) -> DataFrame:
         """Scan the live snapshot, a historical snapshot (``at_version``),
-        or an explicit subset of entries."""
+        or an explicit subset of entries. ``commits`` is an already-listed
+        log (same one-listing rule as ``snapshot``).
+
+        The scan carries the schema pinned by the CREATE commit, so Spark
+        skips its footer-reading inference job; tables created before
+        schema pinning still infer it from the files."""
+        if commits is None:
+            commits = self._commits()
         if entries is None:
-            entries = self.snapshot(at_version=at_version)
+            entries = self.snapshot(at_version=at_version, commits=commits)
         paths = [self._abs(e["path"]) for e in entries]
         if not paths:
             raise ValueError(f"empty table at {self.path}")
@@ -194,7 +216,16 @@ class TxnTable:
                     "reclaimed by vacuum (older than the retention "
                     "horizon); time travel is bounded by retain_last"
                 )
-        return self.spark.read.parquet(*paths)
+        reader = self.spark.read
+        schema = self._schema(commits=commits)
+        if schema is not None:
+            reader = reader.schema(
+                ", ".join(
+                    "`{}` {}".format(s["name"].replace("`", "``"), s["type"])
+                    for s in schema
+                )
+            )
+        return reader.parquet(*paths)
 
     def _write_data_files(
         self, df: DataFrame, version: int, pack: bool = True
@@ -331,76 +362,55 @@ class TxnTable:
             # the one-listing-per-operation rule had this one leak).
             data_cols = [
                 c
-                for c in self.read(self.snapshot(commits=commits)).columns
+                for c in self.read(commits=commits).columns
                 if c not in {delete_col, o1, o2, "_bucket"}
             ]
 
-        # latest-wins compaction of the changelog (shuffle sized by the
-        # changelog, never the table)
-        from pyspark.sql import Window
+        # file-level pruning: which buckets does the delta touch? Taken
+        # from the RAW changelog keys — latest-wins keeps exactly one row
+        # per key, so the compacted key set, and with it the bucket set,
+        # is the same. One tiny job; bounded: <= n_buckets rows of
+        # metadata, like the manifest.
+        bucket = self._bucket_expr(key_col, n_buckets)
+        touched = {r[0] for r in changelog.select(bucket).distinct().collect()}
+        snapshot = self.snapshot(commits=commits)
+        affected = [e for e in snapshot if e["bucket"] in touched]
+        carried = [e for e in snapshot if e["bucket"] not in touched]
 
+        # latest-wins compaction: the plan's ONE window over the
+        # changelog (a shuffle sized by the changelog, never the table).
+        # Latest-wins is WHOLESALE row replacement: the surviving row
+        # replaces the table row with all its columns INCLUDING NULLs (a
+        # CDC update clearing a field must clear it, r11 review).
         w = Window.partitionBy(key_col).orderBy(
             F.col(o1).desc(), F.col(o2).desc()
         )
-        # persisted: the latest-wins window is the merge's dominant cost
-        # and feeds BOTH the touched-buckets collect and the write job —
-        # unpersisted it ran twice (r11 review)
-        compacted = (
+        upserts = (
             changelog.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
-            .drop("_rn", o1, o2)
-            .withColumn("_bucket", self._bucket_expr(key_col, n_buckets))
-            .persist()
+            .filter(~F.coalesce(F.col(delete_col), F.lit(False)))  # deletes
+            .select(*data_cols)
         )
-        try:
-            # file-level pruning: which buckets does the delta touch?
-            touched = {
-                r[0] for r in compacted.select("_bucket").distinct().collect()
-            }  # bounded: <= n_buckets rows of metadata, like the manifest
-            snapshot = self.snapshot(commits=commits)
-            affected = [e for e in snapshot if e["bucket"] in touched]
-            carried = [e for e in snapshot if e["bucket"] not in touched]
-
-            base = (
-                self.read(affected)
-                if affected
-                else self.spark.createDataFrame(
-                    [], self.read(snapshot).select(*data_cols).schema
-                )
-            )
-            delta = compacted.select(
-                *[F.col(c).alias(f"_d_{c}") for c in data_cols],
-                F.col(delete_col).alias("_d_del"),
-                F.lit(True).alias("_d_present"),
-                "_bucket",
-            )
-            # latest-wins is WHOLESALE row replacement: a matched row
-            # takes the changelog row's columns INCLUDING NULLs (a CDC
-            # update clearing a field must clear it — per-column
-            # coalesce kept the stale value forever, r11 review). The
-            # _d_present marker, not key nullness, decides which side
-            # wins, so NULL keys can't misroute the choice.
-            has_delta = F.col("_d_present").isNotNull()
-            merged = (
-                base.join(
-                    delta, base[key_col] == delta[f"_d_{key_col}"], "full_outer"
-                )
-                .filter(~F.coalesce("_d_del", F.lit(False)))  # MATCHED+del: DELETE
-                .select(
-                    *[
-                        F.when(has_delta, F.col(f"_d_{c}"))
-                        .otherwise(F.col(c))
-                        .alias(c)
-                        for c in data_cols
-                    ]
-                )
-                .withColumn("_bucket", self._bucket_expr(key_col, n_buckets))
-            )
-
-            next_commit = len(commits)
-            added = self._write_data_files(merged, version=next_commit)
-        finally:
-            compacted.unpersist()
+        merged = upserts
+        if affected:
+            # the touched buckets' rows minus every changelog key (updated
+            # or deleted) — an anti-join against the raw keys, the same
+            # set as the compacted keys. Keys taken from the windowed
+            # rows would not share the window: column pruning narrows
+            # this side's copy of it into a second changelog shuffle.
+            # The planner picks the join: broadcast build for a small
+            # changelog, so the table side streams unshuffled; sort-merge
+            # for a large one. A NULL key never matches, so NULL-key
+            # table rows are kept and a NULL-key changelog row is an
+            # insert.
+            base = self.read(affected, commits=commits)
+            keys = changelog.select(F.col(key_col).alias("_key"))
+            kept = base.join(keys, base[key_col] == keys["_key"], "left_anti")
+            merged = kept.select(*data_cols).unionByName(upserts)
+        next_commit = len(commits)
+        added = self._write_data_files(
+            merged.withColumn("_bucket", bucket), version=next_commit
+        )
         self._write_commit(
             {
                 "version": next_commit,
@@ -438,7 +448,7 @@ class TxnTable:
         if not frag:
             return {"skipped": True, "reason": "already compact"}
         to_rewrite = [e for b in frag for e in by_bucket[b]]
-        rows = self.read(to_rewrite).withColumn(
+        rows = self.read(to_rewrite, commits=commits).withColumn(
             "_bucket",
             self._bucket_expr(
                 self._key_col(commits=commits), self._n_buckets(commits=commits)

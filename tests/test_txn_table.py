@@ -437,3 +437,127 @@ def test_merge_cdc_version_pinned_at_snapshot_read(spark, tmp_path, monkeypatch)
     monkeypatch.setattr(TxnTable, "snapshot", snapshot_then_concurrent_commit)
     with pytest.raises(RuntimeError, match="concurrent commit conflict"):
         t.merge_cdc(_changelog(spark), app_id="racer", version=1)
+
+
+def _persisted_rdd_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
+def _eight_key_changelog(spark, path):
+    """Eight distinct keys: six updates, one delete, one insert, one key
+    named twice (the shape of a small CDC micro-batch), read back from a
+    parquet file so the planner sees its size."""
+    rows = [(k, f"upd-{k}", float(k), False, 1_000 + k, k) for k in range(1, 7)]
+    rows += [
+        (7, "gone", 0.0, True, 1_007, 7),
+        (10**9, "new", 1.5, False, 1_008, 8),
+        (3, "upd-3-later", 33.0, False, 2_000, 9),
+    ]
+    spark.createDataFrame(
+        rows,
+        "c_custkey bigint, c_name string, c_acctbal double, "
+        "is_delete boolean, ts_us bigint, event_id bigint",
+    ).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_merge_cdc_small_merge_plan_shape(spark, tmp_path, monkeypatch):
+    """A small merge persists nothing, windows the changelog once (one
+    key-hashed shuffle of it) and leaves the anti-join strategy to the
+    planner: broadcast at this size, sort-merge when broadcasting is off."""
+    path = str(tmp_path / "plan_table")
+    base = load_table(spark, SF, "customer").select(
+        "c_custkey", "c_name", "c_acctbal"
+    )
+    t = TxnTable.create(spark, path, base, key_col="c_custkey", n_buckets=8)
+    ch = _eight_key_changelog(spark, str(tmp_path / "changelog"))
+    frames = []  # the DataFrame each data-file write is given
+    write_files = TxnTable._write_data_files
+
+    def capture(self, df, version, pack=True):
+        frames.append(df)
+        return write_files(self, df, version, pack=pack)
+
+    monkeypatch.setattr(TxnTable, "_write_data_files", capture)
+
+    before = _persisted_rdd_ids(spark)
+    assert not t.merge_cdc(ch, app_id="p", version=1)["skipped"]
+    assert _persisted_rdd_ids(spark) == before, "merge left a persisted RDD"
+    assert _rows(t.read()) == _rows(_expected_after_merge(spark, base, ch))
+
+    (write,) = frames
+    qe = write._jdf.queryExecution()
+    plan = qe.executedPlan().toString()
+    # one window over the changelog, and its exchange is the only
+    # shuffle: the broadcast anti-join leaves the table side unshuffled
+    assert plan.count("Window [") == 1, plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "Exchange hashpartitioning(c_custkey" in plan, plan
+    assert "LeftAnti" in plan and "BroadcastHashJoin" in plan, plan
+    assert "broadcast" not in qe.optimizedPlan().toString().lower(), (
+        "forced broadcast hint in the merge plan"
+    )
+
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        t.merge_cdc(ch.filter(F.col("c_custkey") < 4), app_id="p", version=2)
+        plan = frames[-1]._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert "SortMergeJoin" in plan and "BroadcastHashJoin" not in plan, plan
+
+
+def test_merge_cdc_edge_cases_match_reference(spark, tmp_path):
+    """NULL keys on both sides, a delete of a key the table lacks, a key
+    named twice whose latest row is a delete, and a changelog that
+    deletes every row of one bucket all land as the reference MERGE."""
+    path = str(tmp_path / "edge_table")
+    cust = load_table(spark, SF, "customer").select(
+        "c_custkey", "c_name", "c_acctbal"
+    )
+    base = cust.unionByName(
+        spark.createDataFrame([(None, "null-base", 3.5)], cust.schema)
+    )
+    n_buckets = 8
+    t = TxnTable.create(spark, path, base, key_col="c_custkey", n_buckets=n_buckets)
+    bucket_of = TxnTable._bucket_expr("c_custkey", n_buckets)
+    null_bucket = (
+        spark.createDataFrame([(None,)], "c_custkey bigint")
+        .select(bucket_of)
+        .first()[0]
+    )
+    emptied = next(b for b in range(n_buckets) if b != null_bucket)
+    bucket_keys = [
+        r[0]
+        for r in cust.filter(bucket_of == emptied).select("c_custkey").collect()
+    ]
+    assert bucket_keys
+
+    rows = [(k, "del", 0.0, True, 10, k) for k in bucket_keys]
+    other = next(
+        r[0]
+        for r in cust.filter(bucket_of != emptied).select("c_custkey").collect()
+    )
+    rows += [
+        (None, "null-new", 9.25, False, 20, 1),  # NULL key: an insert
+        (10**12, "never", 0.0, True, 20, 2),  # delete of an absent key
+        (other, "first", 1.0, False, 30, 3),  # named twice ...
+        (other, "then-del", 2.0, True, 31, 4),  # ... latest is a delete
+    ]
+    ch = spark.createDataFrame(
+        rows,
+        "c_custkey bigint, c_name string, c_acctbal double, "
+        "is_delete boolean, ts_us bigint, event_id bigint",
+    )
+    stats = t.merge_cdc(ch, app_id="edge", version=1)
+    assert emptied in stats["touched_buckets"]
+    assert not [e for e in t.snapshot() if e["bucket"] == emptied]
+
+    got = t.read().select("c_custkey", "c_name", "c_acctbal")
+    want = _expected_after_merge(spark, base, ch)
+    assert got.count() == want.count()
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+    assert got.filter(F.col("c_custkey").isNull()).count() == 2
+    assert got.filter(F.col("c_custkey") == other).count() == 0
