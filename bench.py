@@ -574,12 +574,16 @@ def _floor_sentinel(spark) -> float:
     return statistics.median(samples)
 
 
-def _time_query(spark, fn, sf_dir: str) -> tuple[float, float, float, float]:
+def _time_query(
+    spark, fn, sf_dir: str, sink=lambda df: df.toPandas()
+) -> tuple[float, float, float, float]:
     """(exec median, plan median, setup median, cold sec) for one query;
     1 cold run (timed: this IS the fresh-lineage first-materialization
-    cost, and the warm-up for JIT/codegen/footer caches) + RUNS timed."""
+    cost, and the warm-up for JIT/codegen/footer caches) + RUNS timed.
+    ``sink`` materializes a DataFrame: ``toPandas`` for the bench, the
+    noop writer for scripts/probe.py."""
     t0 = time.perf_counter()
-    fn(spark, sf_dir).toPandas()
+    sink(fn(spark, sf_dir))
     cold = time.perf_counter() - t0
     samples, plan_samples, setup_samples = [], [], []
     for _ in range(RUNS):
@@ -592,11 +596,11 @@ def _time_query(spark, fn, sf_dir: str) -> tuple[float, float, float, float]:
         t0 = time.perf_counter()
         df._jdf.queryExecution().executedPlan()
         plan_samples.append(time.perf_counter() - t0)
-        # exec: full materialization to Python via Arrow batches (the
-        # idiomatic PySpark result path; DuckDB's fetchall() baseline
-        # also materializes).
+        # exec: full materialization — in the bench, to Python via
+        # Arrow batches (the idiomatic PySpark result path; DuckDB's
+        # fetchall() baseline also materializes).
         t0 = time.perf_counter()
-        df.toPandas()
+        sink(df)
         samples.append(time.perf_counter() - t0)
     return (
         statistics.median(samples),

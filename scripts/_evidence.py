@@ -3,7 +3,9 @@
 Round numbering and commit stamping must be byte-identical across
 SWEEP_r{N}.json (driver_sim.py) and SCALE_LEDGER.jsonl (sf1_smoke.py) —
 a convention change applied to one writer and not the other would
-silently desynchronize the two records, so both import from here.
+silently desynchronize the two records, so both import from here. The
+vanilla-session oracle loop lives here too: driver_sim.py,
+evidence_ledger.py and ``probe.py check`` all run it.
 """
 
 from __future__ import annotations
@@ -11,6 +13,7 @@ from __future__ import annotations
 import glob
 import os
 import subprocess
+import time
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -67,3 +70,48 @@ def load_green_hashes(root: str = REPO_ROOT) -> dict[str, str]:
     from bangdatapipeline_spark.caches import load_green_hashes as _load
 
     return _load(root)
+
+
+def vanilla_session(app: str):
+    """A driver-like session: none of the engine's configs (no
+    nanosAsLong, no timezone) — the contract must self-configure."""
+    from pyspark.sql import SparkSession
+
+    spark = (
+        SparkSession.builder.master("local[8]")
+        .appName(app)
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def oracle_loop(spark, keys, sf_dir: str) -> list[str]:
+    """Check ``keys`` against their DuckDB oracles (``tests.oracle``),
+    printing one PASS/FAIL line each; returns the failed keys.
+
+    Long-session hygiene: a sweep runs many more queries than the
+    driver's window in ONE default-heap session; without cache release
+    the accumulated pinned blocks eventually fail a mid-sweep broadcast
+    build (see bangdatapipeline_spark/caches.py). ``maybe_release`` is
+    pressure-triggered (the graph family can exhaust the heap within one
+    fixed stride at sf0.1), with the fixed stride as a backstop."""
+    from bangdatapipeline_spark import caches
+    from bangdatapipeline_spark.registry import load_all
+    from tests.oracle import compare_query
+
+    registry = load_all()
+    failed = []
+    for i, key in enumerate(keys):
+        caches.maybe_release(spark, i)
+        t0 = time.time()
+        try:
+            ok, msg = compare_query(spark, registry[key], sf_dir)
+        except Exception as ex:  # noqa: BLE001
+            ok, msg = False, f"EXCEPTION {type(ex).__name__}: {ex}"
+        print(f"{'PASS' if ok else 'FAIL'} {key}: {msg} "
+              f"({time.time() - t0:.1f}s)", flush=True)
+        if not ok:
+            failed.append(key)
+    return failed

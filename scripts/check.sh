@@ -18,8 +18,8 @@ python scripts/driver_sim.py
 # the suite's PLANS.md freshness gate (tests/test_plans.py) compares its
 # source_hash stamp against the live tree, same ratchet as the sweep's.
 # Skipped when the stamp already matches (the md5 probe is cheap; the
-# regeneration is a Spark session + 40+ formatted plans).
-python - <<'PYEOF' || python scripts/dump_plans.py
+# regeneration is a Spark session planning 40+ showcase keys).
+python - <<'PYEOF' || python scripts/probe.py plans
 import re, sys
 sys.path.insert(0, "scripts")
 from _evidence import source_tree_hash

@@ -19,24 +19,16 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from _evidence import oracle_loop, vanilla_session  # noqa: E402
 
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     # Driver-like session: note NO nanosAsLong / timezone configs here —
     # the contract must self-configure.
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("driver-sim")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = vanilla_session("driver-sim")
 
     import __spark_entry__ as e
-    from bangdatapipeline_spark.registry import load_all
-    from tests.oracle import compare_query
 
     t0 = time.time()
     df = e.entry(spark)
@@ -45,33 +37,9 @@ def main() -> int:
     print(f"t1 smoke: rows={len(rows)} schema={df.schema.simpleString()} "
           f"ok={smoke_ok} ({time.time()-t0:.1f}s)")
 
-    from bangdatapipeline_spark import caches
-
     qs = e.queries()
     oracles = e.oracle_sql()
-    registry = load_all()
-    results: dict[str, str] = {}
-    failed = []
-    for i, key in enumerate(sorted(qs)):
-        # Long-session hygiene: this sweep runs ~5x more queries than the
-        # real driver window in ONE default-heap session; without cache
-        # release the accumulated pinned blocks eventually fail a
-        # mid-sweep broadcast build (see bangdatapipeline_spark/caches.py).
-        # Pressure-triggered (footprint is query-dependent: the graph
-        # family can exhaust the heap within one fixed stride at sf0.1),
-        # with the fixed stride kept as a deterministic backstop.
-        caches.maybe_release(spark, i)
-        t0 = time.time()
-        try:
-            ok, msg = compare_query(spark, registry[key], sf_dir)
-        except Exception as ex:  # noqa: BLE001
-            ok, msg = False, f"EXCEPTION {type(ex).__name__}: {ex}"
-        checked = "hash" if key in oracles else "rows-only"
-        results[key] = msg
-        status = "PASS" if ok else "FAIL"
-        print(f"t2 {status} [{checked}] {key}: {msg} ({time.time()-t0:.1f}s)")
-        if not ok:
-            failed.append(key)
+    failed = oracle_loop(spark, sorted(qs), sf_dir)  # t2: every key vs its oracle
 
     n_hash = len(oracles)
     n_total = len(qs)

@@ -34,11 +34,12 @@ import glob
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from _evidence import REPO_ROOT, current_round, head_sha  # noqa: E402
+from _evidence import (  # noqa: E402
+    REPO_ROOT, current_round, head_sha, oracle_loop, vanilla_session,
+)
 
 LEDGER_PATH = os.path.join(REPO_ROOT, "EVIDENCE_LEDGER.jsonl")
 
@@ -147,34 +148,8 @@ def main() -> int:
         print(json.dumps({"checked": 0, "failed": [], "over_age_left": []}))
         return 0
 
-    from pyspark.sql import SparkSession
-
-    # vanilla session, like the driver (and window_check)
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("evidence-ledger")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    from bangdatapipeline_spark import caches
-    from bangdatapipeline_spark.registry import load_all
-    from tests.oracle import compare_query
-
-    registry = load_all()
-    failed = []
-    for i, key in enumerate(keys):
-        caches.maybe_release(spark, i)
-        t0 = time.time()
-        try:
-            ok, msg = compare_query(spark, registry[key], args.sf)
-        except Exception as ex:  # noqa: BLE001
-            ok, msg = False, f"EXCEPTION {type(ex).__name__}: {ex}"
-        print(f"{'PASS' if ok else 'FAIL'} {key}: {msg} ({time.time()-t0:.1f}s)",
-              flush=True)
-        if not ok:
-            failed.append(key)
+    # vanilla session, like the driver
+    failed = oracle_loop(vanilla_session("evidence-ledger"), keys, args.sf)
 
     entry = {
         "round": current_round(),

@@ -139,8 +139,11 @@ def test_bench_releases_only_at_pass_boundaries():
     before its 3 timed runs), while no pressure-triggered release can
     fire mid-sweep (bench must not call release_if_pressured /
     maybe_release at all)."""
+    import ast
     import inspect
+    import os
     import re
+    import sys
 
     import bench
 
@@ -157,13 +160,27 @@ def test_bench_releases_only_at_pass_boundaries():
     second = src.index("caches.release(spark)", first + 1)
     assert first < src.index("_CANONICAL_ROWS = (")
     assert src.index("# retry START") > second > src.index("retry_rows = headline_rows")
-    # and every sweep harness DOES release, through the shared policy
-    for runner in (
-        "scripts/driver_sim.py",
-        "scripts/sf1_smoke.py",
-        "scripts/evidence_ledger.py",
-    ):
-        assert "caches.maybe_release(spark, i)" in open(runner).read(), runner
+    # and every sweep harness DOES release, through the shared policy: the
+    # one oracle loop, which driver_sim, evidence_ledger and probe.py check
+    # call, and sf1_smoke's own loop
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    scripts = os.path.join(root, "scripts")
+    if scripts not in sys.path:
+        sys.path.insert(0, scripts)
+    import _evidence
+
+    loop_src = inspect.getsource(_evidence.oracle_loop)
+    assert "caches.maybe_release(spark, i)" in loop_src
+    for runner in ("driver_sim.py", "evidence_ledger.py", "probe.py"):
+        tree = ast.parse(open(os.path.join(scripts, runner)).read())
+        called = {
+            getattr(n.func, "id", getattr(n.func, "attr", None))
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call)
+        }
+        assert "oracle_loop" in called, runner
+    sf1 = open(os.path.join(scripts, "sf1_smoke.py")).read()
+    assert "caches.maybe_release(spark, i)" in sf1
 
 
 def test_memo_keys_use_application_id_not_object_id(spark):

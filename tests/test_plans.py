@@ -633,7 +633,7 @@ def test_plans_doc_is_fresh_at_current_tree():
     specific operator tree; a stale doc (r10 shipped one a full round of
     rewrites behind) silently mis-documents the shipped plans. The doc
     carries a content-addressed source_hash stamp (same formula as the
-    SWEEP freshness gate); regenerate via `python scripts/dump_plans.py`
+    SWEEP freshness gate); regenerate via `python scripts/probe.py plans`
     when this fails."""
     import os
     import re
@@ -647,7 +647,7 @@ def test_plans_doc_is_fresh_at_current_tree():
     m = re.search(r"<!-- source_hash: ([0-9a-f]{32}) -->", head)
     assert m, (
         "docs/PLANS.md has no source_hash stamp — regenerate via "
-        "`python scripts/dump_plans.py`"
+        "`python scripts/probe.py plans`"
     )
     scripts = os.path.join(root, "scripts")
     if scripts not in sys.path:
@@ -656,5 +656,157 @@ def test_plans_doc_is_fresh_at_current_tree():
 
     assert _evidence.source_tree_hash(root) == m.group(1), (
         "docs/PLANS.md is stale relative to the live operator tree — "
-        "re-run `python scripts/dump_plans.py` before closing the round"
+        "re-run `python scripts/probe.py plans` before closing the round"
     )
+
+
+# ``explain("formatted")`` of join_multiway at sf0.01 (detail bodies cut to
+# their ``(id) Name`` headers): one shuffle, five broadcasts, five
+# broadcast-hash joins. Every node appears twice, in the tree and in the
+# numbered detail block.
+_JOIN_MULTIWAY_FORMATTED = """\
+== Physical Plan ==
+AdaptiveSparkPlan (33)
++- HashAggregate (32)
+   +- Exchange (31)
+      +- HashAggregate (30)
+         +- Project (29)
+            +- BroadcastHashJoin Inner BuildRight (28)
+               :- Project (24)
+               :  +- BroadcastHashJoin Inner BuildRight (23)
+               :     :- Project (19)
+               :     :  +- BroadcastHashJoin Inner BuildRight (18)
+               :     :     :- Project (13)
+               :     :     :  +- BroadcastHashJoin Inner BuildRight (12)
+               :     :     :     :- Project (8)
+               :     :     :     :  +- BroadcastHashJoin Inner BuildLeft (7)
+               :     :     :     :     :- BroadcastExchange (4)
+               :     :     :     :     :  +- Project (3)
+               :     :     :     :     :     +- Filter (2)
+               :     :     :     :     :        +- Scan parquet  (1)
+               :     :     :     :     +- Filter (6)
+               :     :     :     :        +- Scan parquet  (5)
+               :     :     :     +- BroadcastExchange (11)
+               :     :     :        +- Filter (10)
+               :     :     :           +- Scan parquet  (9)
+               :     :     +- BroadcastExchange (17)
+               :     :        +- Project (16)
+               :     :           +- Filter (15)
+               :     :              +- Scan parquet  (14)
+               :     +- BroadcastExchange (22)
+               :        +- Filter (21)
+               :           +- Scan parquet  (20)
+               +- BroadcastExchange (27)
+                  +- Filter (26)
+                     +- Scan parquet  (25)
+
+
+(1) Scan parquet
+
+(2) Filter
+
+(3) Project
+
+(4) BroadcastExchange
+
+(5) Scan parquet
+
+(6) Filter
+
+(7) BroadcastHashJoin
+
+(8) Project
+
+(9) Scan parquet
+
+(10) Filter
+
+(11) BroadcastExchange
+
+(12) BroadcastHashJoin
+
+(13) Project
+
+(14) Scan parquet
+
+(15) Filter
+
+(16) Project
+
+(17) BroadcastExchange
+
+(18) BroadcastHashJoin
+
+(19) Project
+
+(20) Scan parquet
+
+(21) Filter
+
+(22) BroadcastExchange
+
+(23) BroadcastHashJoin
+
+(24) Project
+
+(25) Scan parquet
+
+(26) Filter
+
+(27) BroadcastExchange
+
+(28) BroadcastHashJoin
+
+(29) Project
+
+(30) HashAggregate
+
+(31) Exchange
+
+(32) HashAggregate
+
+(33) AdaptiveSparkPlan
+"""
+
+
+def _probe():
+    """scripts/probe.py loaded by path (perfbench/ has a probe module too)."""
+    import importlib.util
+    import os
+
+    path = os.path.join(os.path.dirname(__file__), "..", "scripts", "probe.py")
+    spec = importlib.util.spec_from_file_location("scripts_probe", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_plan_shape_counts_each_node_once():
+    """The plan-shape counter behind docs/PLANS.md counts each node once
+    (a regex over the whole text sees every node twice; subtracting the
+    BroadcastExchange hits from the Exchange hits then gives -8 here) and
+    keeps shuffle and broadcast exchanges apart. Spark-free."""
+    counts = _probe().plan_shape(_JOIN_MULTIWAY_FORMATTED)
+    assert (counts["shuffle"], counts["bcast"], counts["BHJ"]) == (1, 5, 5), counts
+    assert counts["scan"] == 6 and counts["SMJ"] == counts["reused"] == 0, counts
+
+
+def test_plan_shape_rows_are_byte_stable(spark, sf_dir):
+    """Regenerating docs/PLANS.md at an unchanged tree must give the same
+    bytes: the rows carry counts, never AQE stage ids or plan_ids, and a
+    row does not depend on which rows came before it.
+    graph_label_propagation runs supersteps while it builds its plan,
+    materializing a substrate that graph_walks_det's plan also reads
+    (AQE-final once materialized); each row is planned after a cache
+    release, so graph_walks_det's row is the same alone and after it."""
+    from bangdatapipeline_spark import caches
+
+    probe = _probe()
+    keys = ["graph_label_propagation", "graph_walks_det"]
+    assert set(keys) <= {k for k, _ in probe.showcase()}
+    caches.release(spark)  # the clean session a fresh `probe.py plans` has
+    alone = probe.plan_rows(spark, sf_dir, keys[1:])
+    first = probe.plan_rows(spark, sf_dir, keys)
+    assert len(first) == 2 and all(r.startswith("| `") for r in first), first
+    assert probe.plan_rows(spark, sf_dir, keys) == first
+    assert first[1] == alone[0]
