@@ -16,10 +16,10 @@ Scale notes (100 TB):
     (#types² keys) aggregation; the shuffle moves only the lag pairs.
   * `events_anomaly` — two aggregations sharing the user_id hash
     partitioning; nothing wide materializes.
-  * `graph_pagerank` — each iteration is one shuffle on the edge src key
-    (the classic Pregel round as join+groupBy); the rank table is O(|V|)
-    and AQE broadcast-joins it when it fits, while the edge table keeps a
-    stable hash partitioning that every iteration reuses.
+  * `graph_pagerank` — each iteration gathers at src over the cached,
+    src-partitioned edge list (the classic Pregel round as join+groupBy):
+    the O(|V|) rank table is broadcast onto the edges and the aggregate
+    keys on the edge partitioning, so no iteration shuffles the edges.
 """
 
 from __future__ import annotations
@@ -275,7 +275,7 @@ _DAMPING = 0.85
 
 
 def _node_label() -> "F.Column":
-    """Integer node id -> display label under _trade_contrib's encoding
+    """Integer node id -> display label under _trade_edges' encoding
     (custkey*2 -> cN even, suppkey*2+1 -> sN odd). ONE definition — the
     encoding and its decoding must change together (r9 review: two
     verbatim copies had to be hand-synchronized). Decode with INTEGER
@@ -288,17 +288,20 @@ def _node_label() -> "F.Column":
 
 
 @memo
-def _trade_contrib(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+def _trade_edges(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Build-once-per-(session, sf_dir) cached trade graph: the doubled
-    (src, dst, w=1/outdeg(src)) edge list of the customer<->supplier
-    graph, its initial uniform rank vector, and |V| as a LAZY 1-row
-    DataFrame (``n_nodes``) — scalars the formulas need ride in via
+    distinct (src, dst) edge list of the customer<->supplier graph,
+    hash-partitioned by src, and |V| as a LAZY 1-row DataFrame
+    (``n_nodes``) — scalars the formulas need ride in via
     crossJoin(broadcast(...)), the repo-wide pattern, so building the
-    graph triggers no driver-side action. Shared by ``graph_pagerank``
-    and ``graph_kcore`` — the edge build (join + distinct over the fact
-    table) is the expensive part and is paid once per session."""
+    graph triggers no driver-side action. Shared by every trade-graph
+    key (pagerank, k-core, LPA/modularity, BFS, walks, closeness) — the
+    edge build (join + distinct over the fact table) is the expensive
+    part and is paid once per session. The list is symmetric, so a
+    node's in-edges are exactly the rows with ``src`` = that node: a
+    consumer that needs degrees counts them partition-local off the
+    cache (PageRank's 1/outdeg weight is derived per round, not stored).
+    """
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     e0 = (
@@ -311,9 +314,7 @@ def _trade_contrib(
     )
     # both directions from ONE e0 reference: separate references pick up
     # different inferred isnotnull filters, so exchange reuse misses and
-    # the build scans, joins and de-duplicates lineitem twice. Filters
-    # inferred on generated columns stay above the generator, so edges
-    # and deg share one (reused) e0 exchange over one lineitem scan.
+    # the build scans, joins and de-duplicates lineitem twice.
     edges = e0.select(
         F.inline(
             F.array(
@@ -322,46 +323,26 @@ def _trade_contrib(
             )
         )
     )
-    deg = edges.groupBy(F.col("src").alias("node")).agg(
-        (1.0 / F.count("*")).alias("w")
-    )
-    # One cached structure for every iterative consumer:
-    # (src, dst, 1/outdeg(src)), packed into partitions of ~150k edges —
-    # every iteration re-scans this cache, so its partition count should
-    # track |E| (edges-per-partition budget), not the upstream scan's
-    # file splits. r13 (VERDICT r12 task 9): partitioned BY src, not
-    # round-robin — (a) the keyed exchange skips the local sort every
-    # keyless repartition pays (sortBeforeRepartition), and (b) each
+    # Packed into partitions of ~150k edges — every round of every
+    # iterative consumer re-scans this cache, so its partition count
+    # should track |E| (edges-per-partition budget), not the upstream
+    # scan's file splits. r13 (VERDICT r12 task 9): partitioned BY src,
+    # not round-robin — (a) the keyed exchange skips the local sort every
+    # keyless repartition pays (sortBeforeRepartition), (b) each
     # BFS/closeness superstep joins the cache on src, so the edge side
     # is already distributed correctly and only the |V|-row state table
-    # shuffles per round (the cluster analogue is bucketing the edge
-    # list by src; pagerank broadcasts its ranks, so it is unaffected
-    # either way).
+    # moves per round, and (c) PageRank's per-round groupBy(src) and
+    # k-core's degree count run partition-local off the cached layout
+    # (the cluster analogue is bucketing the edge list by src).
     n_edge_parts = max(8, spark.sparkContext.defaultParallelism // 4)
-    contrib_src = (
-        edges.join(F.broadcast(deg), edges["src"] == deg["node"])
-        .select("src", "dst", "w")
-        .repartition(n_edge_parts, "src")
-        .cache()
-    )
+    edges = edges.repartition(n_edge_parts, "src").cache()
     # |V| as a lazy 1-row aggregate OVER THE CACHE (distinct src = every
     # node, since the doubled edge list gives each node outdegree >= 1) —
     # no eager action; consumers crossJoin(broadcast(n_df)) it in. The
     # 1-row result is itself cached: the PageRank loop references it per
     # round and would otherwise rescan the edge cache each time.
-    n_df = contrib_src.agg(
-        F.count_distinct("src").cast("bigint").alias("n_nodes")
-    ).cache()
-    init = (
-        contrib_src.select("src")
-        .distinct()
-        .crossJoin(F.broadcast(n_df))
-        .select(
-            F.col("src").alias("node"),
-            (F.lit(1.0) / F.col("n_nodes")).alias("r"),
-        )
-    )
-    return contrib_src, init, n_df
+    n_df = edges.agg(F.count_distinct("src").cast("bigint").alias("n_nodes")).cache()
+    return edges, n_df
 
 
 def _pagerank_oracle() -> str:
@@ -415,29 +396,48 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan/scale: nodes are INTEGER-encoded (custkey*2 / suppkey*2+1 —
     joins and shuffles hash longs, not strings; the display label is
-    reconstructed only in the final projection). The edge list, pre-
-    joined with the 1/outdeg contribution weight, is built once and
-    cached per (session, sf_dir) — the same memo pattern as
-    tables.load_table — so repeated runs (and the 3 rounds within one
-    run) never rebuild the graph. Each iteration BROADCASTS the O(|V|)
-    rank table onto the cached edges: no edge re-shuffle, just one
-    map-side hash join over the cache plus one aggregate shuffle of
-    partial rank mass keyed by dst — the communication pattern
-    Pregel/GraphX uses. The explicit broadcast is right while |V| ≪ |E|
-    (here 16k nodes vs 1.2M directed edges; ranks for even 100M nodes ≈
-    a few GB — at billion-node scale drop the hint and bucket both
-    sides on the node key so the join is co-partitioned instead). Each
-    round after the first pins the previous round's |V|-row rank table
-    with a lazy ``localCheckpoint`` before it is broadcast (r12):
-    without it, round t's broadcast build re-executed rounds 1..t-1
-    over the cached edges — O(T²) edge passes for T rounds. The oracle
-    unrolls the same 3 rounds as chained CTEs. Ranks are emitted as round(r*1e6, 4) ppm: summation-order
-    noise is ~1e-15 relative, many orders of magnitude inside the
-    rounding step.
+    reconstructed only in the final projection). The bare (src, dst)
+    edge list is built once and cached per (session, sf_dir), hash-
+    partitioned by src (``_trade_edges``). Rounds GATHER AT SRC: the
+    list is symmetric, so node v's in-edges are exactly the rows with
+    src = v. The |V|-row state (node, r, w=1/outdeg) is BROADCAST onto
+    the cached edges by dst = node, and ``groupBy(src)`` sums r*w and
+    counts the edges — the count is the next round's outdegree. That
+    aggregate keys on the cache's own partitioning, so it runs in the
+    cache scan's stage: no round shuffles (aggregating by dst would add
+    a hashpartitioning(dst) exchange and a reduce stage per round). The
+    initial state is the same partition-local count. This is Pregel's gather step on the vertex that owns
+    the edge partition; per edge the product r(u) * (1.0/count(u)) is
+    the same double as a dst-keyed round's, so only summation order can
+    differ. The explicit broadcast is right while |V| ≪ |E| (here 16k
+    nodes vs 1.2M directed edges; ranks for even 100M nodes ≈ a few GB —
+    at billion-node scale drop the hint and bucket both sides on the
+    node key so the join is co-partitioned instead). Each round after
+    the first pins the previous round's |V|-row state with a lazy
+    ``localCheckpoint`` before it is broadcast (r12): without it, round
+    t's broadcast build re-executed rounds 1..t-1 over the cached edges
+    — O(T²) edge passes for T rounds. The oracle unrolls the same 3
+    rounds as chained CTEs. Ranks are emitted as round(r*1e6, 4) ppm:
+    summation-order noise is ~1e-15 relative, many orders of magnitude
+    inside the rounding step.
     """
-    contrib_src, ranks, n_df = _trade_contrib(spark, sf_dir)
+    edges, n_df = _trade_edges(spark, sf_dir)
+
+    def state(agg: DataFrame, r: "F.Column") -> DataFrame:
+        # |V| rides in as a broadcast 1-row aggregate (lazy scalar — the
+        # same 1/n and (1-d)/n each oracle round computes from n.cnt).
+        return agg.crossJoin(F.broadcast(n_df)).select(
+            F.col("src").alias("node"),
+            r.alias("r"),
+            (F.lit(1.0) / F.col("deg")).alias("w"),
+        )
+
+    ranks = state(
+        edges.groupBy("src").agg(F.count("*").alias("deg")),
+        F.lit(1.0) / F.col("n_nodes"),
+    )
     for i in range(_PAGERANK_ITERS):
-        # r12: pin the previous round's |V|-row rank table before it is
+        # r12: pin the previous round's |V|-row state before it is
         # broadcast — round t's broadcast build otherwise re-executes
         # rounds 1..t-1 over the cached edges (O(T²) edge passes; the
         # graph_bfs_levels docstring documents the same re-execution
@@ -450,20 +450,14 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # so the cheap form is strictly better here.
         if i > 0:
             ranks = ranks.localCheckpoint(eager=False)
-        ranks = (
-            contrib_src.join(F.broadcast(ranks), contrib_src["src"] == ranks["node"])
-            .groupBy("dst")
-            .agg(F.sum(F.col("r") * F.col("w")).alias("s"))
-            # |V| rides in as a broadcast 1-row aggregate (lazy scalar —
-            # the same (1-d)/n each oracle round computes from n.cnt).
-            .crossJoin(F.broadcast(n_df))
-            .select(
-                F.col("dst").alias("node"),
-                (
-                    F.lit(1 - _DAMPING) / F.col("n_nodes")
-                    + F.lit(_DAMPING) * F.col("s")
-                ).alias("r"),
-            )
+        ranks = state(
+            edges.join(F.broadcast(ranks), edges["dst"] == ranks["node"])
+            .groupBy("src")
+            .agg(
+                F.sum(F.col("r") * F.col("w")).alias("s"),
+                F.count("*").alias("deg"),
+            ),
+            F.lit(1 - _DAMPING) / F.col("n_nodes") + F.lit(_DAMPING) * F.col("s"),
         )
     label = _node_label()
     return ranks.select(
@@ -786,7 +780,7 @@ def _oriented_copurchase(
     fwd = (F.col("d_a") < F.col("d_b")) | (
         (F.col("d_a") == F.col("d_b")) & (F.col("pa") < F.col("pb"))
     )
-    # r13 (same §2.4 layout rule as _trade_contrib): the oriented
+    # r13 (same §2.4 layout rule as _trade_edges): the oriented
     # cache is hash-partitioned by src — _out_adjacency's collect_list
     # groupBy(src) and the HITS h-step groupBy(src) then run
     # partition-local off the cached layout (each previously paid its
@@ -1100,7 +1094,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan/scale: nodes are integer-encoded like ``graph_pagerank``, and
     the doubled edge list comes from the SAME per-session cached trade
-    graph (``_trade_contrib``) PageRank iterates over — the expensive
+    graph (``_trade_edges``) PageRank iterates over — the expensive
     join+distinct edge build is paid once for the whole graph family.
     Each round is (degree aggregate -> broadcast the O(|V|) survivor set
     onto the edge list twice) — edges are filtered in place, never
@@ -1109,8 +1103,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     — checkpoint every ~5 rounds at depth). The oracle unrolls the same
     rounds as chained CTEs.
     """
-    contrib_src, _, _ = _trade_contrib(spark, sf_dir)
-    edges = contrib_src.select("src", "dst")
+    edges, _n = _trade_edges(spark, sf_dir)
 
     def degrees(e: DataFrame) -> DataFrame:
         return e.groupBy(F.col("src").alias("node")).agg(F.count("*").alias("deg"))
@@ -1298,10 +1291,8 @@ def _lpa_labels(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]
     edge list) — shared by graph_label_propagation and graph_modularity.
     The rounds are deterministic, so the cached labels are identical to
     a rebuild; both consumers then skip the round joins."""
-    contrib, _init, _n = _trade_contrib(spark, sf_dir)
-    edges = contrib.select("src", "dst")
-    # node set straight off the cached edges (not the rank-init vector —
-    # that would drag its |V|-scalar crossJoin into every LPA plan)
+    edges, _n = _trade_edges(spark, sf_dir)
+    # node set straight off the cached edges
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()
@@ -1338,14 +1329,14 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     its size and smallest member.
 
     Shares the session-cached edge list with pagerank/k-core
-    (``_trade_contrib``) — the expensive distinct-edge build is paid
+    (``_trade_edges``) — the expensive distinct-edge build is paid
     once. Each round is one join + one bounded aggregate: the join
     shuffles on node id, the (node, lab) count aggregate partial-combines
     map-side, and the argmax window rides the same node partitioning.
 
     100 TB: rounds are Pregel-style join+agg supersteps — the edge list
     stays hash-partitioned on src across rounds (one co-located shuffle
-    per round, like ``graph_pagerank``); label skew (giant communities)
+    per round, keyed by dst); label skew (giant communities)
     is bounded because messages aggregate to (node, lab) pairs, never
     fan out.
     """
@@ -1412,7 +1403,7 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     the frontier stops growing, and the unrolled-CTE oracle reproduces
     them exactly. Output: per BFS level, node count + smallest node.
 
-    Shares the session-cached doubled edge list (``_trade_contrib``).
+    Shares the session-cached doubled edge list (``_trade_edges``).
     Plan per round: one join (frontier x edges, shuffled on node) + one
     min-aggregate — message volume is bounded by |reached| x avg-degree,
     and the aggregate collapses it back to |reached| rows before the
@@ -1434,8 +1425,7 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     reliable .checkpoint() (executor loss would otherwise be fatal
     mid-job) every few rounds.
     """
-    contrib, _init, _n = _trade_contrib(spark, sf_dir)
-    edges = contrib.select("src", "dst")
+    edges, _n = _trade_edges(spark, sf_dir)
     dist = (
         edges.filter(F.col("src") < _BFS_SEED_BELOW)
         .select(F.col("src").alias("node"))
@@ -1761,8 +1751,7 @@ def graph_walks_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cached edge partitioning and the window keys on walk id;
     neither moves the full edge list after the first shuffle.
     """
-    contrib, _init, _n = _trade_contrib(spark, sf_dir)
-    edges = contrib.select("src", "dst")
+    edges, _n = _trade_edges(spark, sf_dir)
     walks = (
         edges.filter((F.col("src") % 2 == 0) & (F.col("src") < _WALK_SEED_BELOW))
         .select(F.col("src").alias("start"))
@@ -2186,8 +2175,8 @@ def graph_hits_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Each iteration is ONE broadcast join into the cached edge list
     (scores are per-node, nodes << edges, so the edge relation is never
     shuffled) followed by a map-side-combined sum on the receiving
-    endpoint — the textbook Pregel superstep as DataFrames, same shape
-    as graph_pagerank but with exact BIGINT message values. r12 changes
+    endpoint — the textbook Pregel superstep as DataFrames, with exact
+    BIGINT message values. r12 changes
     (guide §1.2/§2.4): a1 (the oriented in-degree) reads the memoized
     |V|-row in-adjacency array lengths instead of scanning + aggregating
     the |E|-row edge list, and a2 — consumed TWICE in the final plan
@@ -2309,8 +2298,7 @@ def graph_closeness_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     mask words, so k seeds cost ~1 word of shuffle per edge per round
     over the same co-partitioned edge buckets — not k-fold the state.
     """
-    contrib, _init, _n = _trade_contrib(spark, sf_dir)
-    edges = contrib.select("src", "dst")
+    edges, _n = _trade_edges(spark, sf_dir)
     seeds = (
         edges.filter(F.col("src") < _BFS_SEED_BELOW)
         .select(F.col("src").alias("seed"))

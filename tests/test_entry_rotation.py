@@ -101,7 +101,7 @@ def test_query_hash_covers_transitive_helpers_and_constants():
     from bangdatapipeline_spark.operators import graph_analytics as ga
 
     pr = fingerprint_material(registry["graph_pagerank"])
-    assert inspect.getsource(ga._trade_contrib) in pr
+    assert inspect.getsource(ga._trade_edges) in pr
     # memoized builders are walked through their caches.memo wrapper:
     # the wrapped function's own callees stay inside the material
     from bangdatapipeline_spark import tables

@@ -236,20 +236,49 @@ def test_pagerank_iterations_broadcast_ranks(spark, sf_dir):
 
 
 def test_trade_graph_build_scans_lineitem_once(spark, sf_dir):
-    """The shared trade-graph build derives both edge directions and the
-    degree table from one distinct (customer, supplier) edge list, so its
-    final plan scans lineitem once; the degree side reuses that exchange."""
-    from bangdatapipeline_spark.operators.graph_analytics import _trade_contrib
+    """The shared trade-graph build derives both edge directions from one
+    distinct (customer, supplier) edge list, so its final plan scans
+    lineitem once: one broadcast (orders) and two shuffles (the distinct,
+    then the src repartition), no degree side."""
+    from bangdatapipeline_spark.operators.graph_analytics import _trade_edges
 
-    contrib, _init, _n = _trade_contrib(spark, sf_dir)
-    contrib.count()  # materialize the cache: exchange reuse is decided at run time
+    edges, _n = _trade_edges(spark, sf_dir)
+    edges.count()  # materialize the cache: the final plan is decided at run time
     cached = (
-        contrib._jdf.queryExecution().withCachedData().cacheBuilder().cachedPlan()
+        edges._jdf.queryExecution().withCachedData().cacheBuilder().cachedPlan()
     ).toString()
     final = cached.split("== Initial Plan ==")[0]
     assert "isFinalPlan=true" in final, final[:3000]
     assert final.count("lineitem.parquet") == 1, final
-    assert "ReusedExchange" in final, final
+    assert final.count("BroadcastExchange") == 1, final
+    assert final.count("Exchange hashpartitioning") == 2, final
+    assert "ReusedExchange" not in final, final
+
+
+def _final_nodes(plan) -> list[str]:
+    """Class names of an executed plan's nodes, through AQE wrappers and
+    query stages, NOT into cached relations (their build is not part of
+    the query that reads them)."""
+    name = plan.getClass().getSimpleName()
+    if name == "InMemoryTableScanExec":
+        return [name]
+    if name == "AdaptiveSparkPlanExec":
+        return [name] + _final_nodes(plan.executedPlan())
+    if name.endswith("QueryStageExec"):
+        return [name] + _final_nodes(plan.plan())
+    kids = plan.children()
+    return [name] + [n for i in range(kids.size()) for n in _final_nodes(kids.apply(i))]
+
+
+def test_pagerank_rounds_gather_at_src_without_shuffle(spark, sf_dir):
+    """PageRank rounds aggregate by src, the key the cached edge list is
+    hash-partitioned by, so once it has run the final plan has no shuffle
+    outside the cached build (a groupBy(dst) round adds one exchange)."""
+    df = REGISTRY["graph_pagerank"].fn(spark, sf_dir)
+    df.toPandas()
+    nodes = _final_nodes(df._jdf.queryExecution().executedPlan())
+    assert "InMemoryTableScanExec" in nodes, nodes
+    assert "ShuffleExchangeExec" not in nodes, nodes
 
 
 def test_kmeans_assignment_broadcasts_centroids(spark, sf_dir):

@@ -614,12 +614,12 @@ def test_bfs_seed_level_and_monotone_reach(spark, sf_dir):
     rows = {r.level: r for r in REGISTRY["graph_bfs_levels"].fn(spark, sf_dir).collect()}
     from bangdatapipeline_spark.operators.graph_analytics import (
         _BFS_SEED_BELOW,
-        _trade_contrib,
+        _trade_edges,
     )
 
-    contrib, _i, _n = _trade_contrib(spark, sf_dir)
+    edges, _n = _trade_edges(spark, sf_dir)
     n_seeds = (
-        contrib.select("src").filter(F.col("src") < _BFS_SEED_BELOW).distinct().count()
+        edges.select("src").filter(F.col("src") < _BFS_SEED_BELOW).distinct().count()
     )
     assert rows[0].n_nodes == n_seeds
     assert set(rows) == set(range(max(rows) + 1))
