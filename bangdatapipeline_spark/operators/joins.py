@@ -142,22 +142,36 @@ GROUP BY n_name
 """,
 )
 def join_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q5-shaped 6-table snowflake join. region/nation/supplier are
-    broadcast automatically; AQE reorders the rest. The local-supplier
-    predicate (s_nationkey = c_nationkey) makes it a genuine snowflake."""
+    """TPC-H-Q5-shaped 6-table snowflake join, fact table first. The
+    local-supplier predicate (s_nationkey = c_nationkey) makes it a
+    genuine snowflake.
+
+    Join order is the plan: AQE never reorders joins, and without CBO the
+    planner sizes a join as the product of its inputs, so a joined chain
+    on the left is never broadcastable and only the right input of each
+    join can be. With lineitem on the left, every right input is one
+    filtered table (orders >= 1996, customer, nation, region, supplier):
+    each is broadcast while it fits the threshold and sort-merged at
+    design scale, while lineitem streams through one scan stage. A
+    dimension-first chain would leave lineitem as the only broadcastable
+    input, so the fact table would be broadcast.
+    """
     t = {n: load_table(spark, sf_dir, n) for n in
          ("region", "nation", "customer", "orders", "lineitem", "supplier")}
     return (
-        t["region"].filter(F.col("r_name").isin("ASIA", "EUROPE"))
-        .join(t["nation"], F.col("n_regionkey") == F.col("r_regionkey"))
-        .join(t["customer"], F.col("c_nationkey") == F.col("n_nationkey"))
+        t["lineitem"]
         .join(
             t["orders"].filter(
                 F.col("o_orderdate") >= F.expr("TIMESTAMP_NTZ '1996-01-01 00:00:00'")
             ),
-            F.col("o_custkey") == F.col("c_custkey"),
+            F.col("l_orderkey") == F.col("o_orderkey"),
         )
-        .join(t["lineitem"], F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
+        .join(t["nation"], F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(
+            t["region"].filter(F.col("r_name").isin("ASIA", "EUROPE")),
+            F.col("n_regionkey") == F.col("r_regionkey"),
+        )
         .join(
             t["supplier"],
             (F.col("s_suppkey") == F.col("l_suppkey"))
@@ -845,8 +859,11 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     The bit set is built distributed (explode + distinct over the dim
     side), collapsed to ONE array row, and crossJoin-broadcast onto the
     fact side; the membership test is a JVM-side ``array_contains``
-    conjunction inside the scan stage — the fact table is never
-    shuffled (the only Exchange is the 7-row year rollup). The output
+    conjunction, which needs no partitioning of the fact side. The fact
+    rows are still shuffled once, by the ``spread`` rebalance of their
+    2-column projection before the bit hashing, so the plan has three
+    Exchanges: the bit-set aggregate, that rebalance and the 7-row year
+    rollup. The output
     audits the filter itself: per order-year, rows passing the bloom
     gate, true dimension matches (broadcast left join), and surviving
     false positives with their rate — the oracle reproduces the same

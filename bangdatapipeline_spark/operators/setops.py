@@ -10,7 +10,7 @@ keeps k rows, the driver merges — no full sort ever materializes.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from bangdatapipeline_spark.registry import register
 from bangdatapipeline_spark.tables import load_table
@@ -55,6 +55,41 @@ def setop_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return c.union(s).distinct()
 
 
+def multiset_ops(df: DataFrame, key: str, in_a: Column, in_b: Column) -> DataFrame:
+    """INTERSECT, EXCEPT, INTERSECT ALL and EXCEPT ALL of bag A (rows
+    where ``in_a``) and bag B (rows where ``in_b``) projected on ``key``,
+    as ``(op, key)`` rows from one aggregate.
+
+    Per key, ``cu`` counts its copies in A and ``cf`` its copies in B; a
+    key then emits 1 ``intersect`` row if cu > 0 and cf > 0, 1 ``except``
+    row if cu > 0 and cf = 0, least(cu, cf) ``intersect_all`` copies and
+    greatest(cu - cf, 0) ``except_all`` copies. That is the multiset
+    algebra Spark's RewriteIntersectAll / RewriteExceptAll apply to each
+    ALL operator (counts, then replicate rows), here computed once for
+    all four; NULL keys group together, as set operations compare them.
+    """
+    counts = (
+        df.filter(in_a | in_b)
+        .groupBy(key)
+        .agg(F.count_if(in_a).alias("cu"), F.count_if(in_b).alias("cf"))
+    )
+    cu, cf = F.col("cu"), F.col("cf")
+    emit = {
+        "intersect": (cu > 0) & (cf > 0),
+        "except": (cu > 0) & (cf == 0),
+        "intersect_all": F.least(cu, cf),
+        "except_all": F.greatest(cu - cf, F.lit(0)),
+    }
+    per_op = counts.select(
+        key,
+        F.inline(F.array(*(
+            F.struct(F.lit(op).alias("op"), n.cast("int").alias("n"))
+            for op, n in emit.items()
+        ))),
+    )
+    return per_op.select("op", F.explode(F.array_repeat(key, "n")).alias(key))
+
+
 @register(
     "setop_intersect_except",
     oracle="""
@@ -70,22 +105,14 @@ SELECT 'except_all' AS op, k FROM (SELECT k FROM urgent EXCEPT ALL SELECT k FROM
 """,
 )
 def setop_intersect_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT / EXCEPT and their ALL (multiset) variants in one result,
-    tagged by op."""
-    o = load_table(spark, sf_dir, "orders")
-    urgent = o.filter(F.col("o_orderpriority") == "1-URGENT").select(
-        F.col("o_custkey").alias("k")
-    )
-    fstat = o.filter(F.col("o_orderstatus") == "F").select(F.col("o_custkey").alias("k"))
-
-    def tag(op: str, df: DataFrame) -> DataFrame:
-        return df.select(F.lit(op).alias("op"), "k")
-
-    return (
-        tag("intersect", urgent.intersect(fstat))
-        .unionByName(tag("except", urgent.subtract(fstat)))
-        .unionByName(tag("intersect_all", urgent.intersectAll(fstat)))
-        .unionByName(tag("except_all", urgent.exceptAll(fstat)))
+    """INTERSECT / EXCEPT and their ALL (multiset) variants of the urgent
+    and status-F customer bags, in one result tagged by op. One orders
+    scan and one ``groupBy(o_custkey)`` (``multiset_ops``) serve all
+    four, so the only shuffle moves per-key counts; the four native
+    operators would each scan both bags and shuffle or broadcast them."""
+    o = load_table(spark, sf_dir, "orders").withColumnRenamed("o_custkey", "k")
+    return multiset_ops(
+        o, "k", F.col("o_orderpriority") == "1-URGENT", F.col("o_orderstatus") == "F"
     )
 
 

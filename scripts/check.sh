@@ -28,5 +28,7 @@ m = re.search(r"<!-- source_hash: ([0-9a-f]{32}) -->",
 sys.exit(0 if m and m.group(1) == source_tree_hash() else 1)
 PYEOF
 python -m pytest tests/ -x -q
+# the benchmark's own tests (no Spark, ~4 s), incl. the op-key/oracle registry check
+python -m pytest perfbench -q
 python scripts/evidence_ledger.py --status
 python bench.py

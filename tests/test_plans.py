@@ -255,19 +255,40 @@ def test_trade_graph_build_scans_lineitem_once(spark, sf_dir):
     assert "ReusedExchange" not in final, final
 
 
-def _final_nodes(plan) -> list[str]:
-    """Class names of an executed plan's nodes, through AQE wrappers and
-    query stages, NOT into cached relations (their build is not part of
-    the query that reads them)."""
+def _walk_final(plan, above=()):
+    """Yield (node, class names of the nodes above it) for an executed
+    plan, through AQE wrappers and query stages, NOT into cached relations
+    (their build is not part of the query that reads them)."""
     name = plan.getClass().getSimpleName()
+    yield plan, above
     if name == "InMemoryTableScanExec":
-        return [name]
+        return
     if name == "AdaptiveSparkPlanExec":
-        return [name] + _final_nodes(plan.executedPlan())
-    if name.endswith("QueryStageExec"):
-        return [name] + _final_nodes(plan.plan())
-    kids = plan.children()
-    return [name] + [n for i in range(kids.size()) for n in _final_nodes(kids.apply(i))]
+        kids = [plan.executedPlan()]
+    elif name.endswith("QueryStageExec"):
+        kids = [plan.plan()]
+    else:
+        children = plan.children()
+        kids = [children.apply(i) for i in range(children.size())]
+    for kid in kids:
+        yield from _walk_final(kid, above + (name,))
+
+
+def _final_nodes(plan) -> list[str]:
+    """Class names of an executed plan's nodes (see ``_walk_final``)."""
+    return [node.getClass().getSimpleName() for node, _ in _walk_final(plan)]
+
+
+def _final_scans(df, table: str) -> list[tuple[str, ...]]:
+    """Run ``df``, then return, for each scan of ``table`` in its final
+    plan, the class names of the nodes above that scan."""
+    df.toPandas()
+    return [
+        above
+        for node, above in _walk_final(df._jdf.queryExecution().executedPlan())
+        if node.getClass().getSimpleName() == "FileSourceScanExec"
+        and f"/{table}.parquet" in node.toString()
+    ]
 
 
 def test_pagerank_rounds_gather_at_src_without_shuffle(spark, sf_dir):
@@ -279,6 +300,27 @@ def test_pagerank_rounds_gather_at_src_without_shuffle(spark, sf_dir):
     nodes = _final_nodes(df._jdf.queryExecution().executedPlan())
     assert "InMemoryTableScanExec" in nodes, nodes
     assert "ShuffleExchangeExec" not in nodes, nodes
+
+
+def test_multiway_join_streams_lineitem(spark, sf_dir):
+    """q5 chains its joins from lineitem, so the fact table is the streamed
+    side of every join: one lineitem scan, never under a broadcast (a
+    dimension-first chain broadcasts all of lineitem, since a joined
+    chain on the left is never broadcastable)."""
+    scans = _final_scans(REGISTRY["join_multiway"].fn(spark, sf_dir), "lineitem")
+    assert len(scans) == 1, scans
+    assert "BroadcastExchangeExec" not in scans[0], scans
+
+
+def test_setops_read_orders_once(spark, sf_dir):
+    """The four set operations share one orders scan and one per-key count
+    aggregate: one shuffle, no broadcast and no join."""
+    df = REGISTRY["setop_intersect_except"].fn(spark, sf_dir)
+    assert len(_final_scans(df, "orders")) == 1
+    nodes = _final_nodes(df._jdf.queryExecution().executedPlan())
+    assert nodes.count("ShuffleExchangeExec") == 1, nodes
+    assert "BroadcastExchangeExec" not in nodes, nodes
+    assert not [n for n in nodes if "Join" in n or "Cartesian" in n], nodes
 
 
 def test_kmeans_assignment_broadcasts_centroids(spark, sf_dir):
@@ -689,10 +731,10 @@ def test_plans_doc_is_fresh_at_current_tree():
     )
 
 
-# ``explain("formatted")`` of join_multiway at sf0.01 (detail bodies cut to
-# their ``(id) Name`` headers): one shuffle, five broadcasts, five
-# broadcast-hash joins. Every node appears twice, in the tree and in the
-# numbered detail block.
+# ``explain("formatted")`` of a dimension-first join_multiway chain at
+# sf0.01 (detail bodies cut to their ``(id) Name`` headers): one shuffle,
+# five broadcasts, five broadcast-hash joins. Every node appears twice, in
+# the tree and in the numbered detail block.
 _JOIN_MULTIWAY_FORMATTED = """\
 == Physical Plan ==
 AdaptiveSparkPlan (33)

@@ -1047,3 +1047,39 @@ def test_sequence_gaps_complement_islands(spark):
         assert g["gap_start"] not in kset and g["gap_end"] not in kset
     if len(gaps) < 1000:  # cap not binding -> exact tiling
         assert sum(g["gap_len"] for g in gaps) + len(kset) == max(kset) - min(kset) + 1
+
+
+def test_multiset_ops_match_native_set_operators(spark):
+    """setops.multiset_ops equals Spark's own INTERSECT, EXCEPT, INTERSECT
+    ALL and EXCEPT ALL as a multiset (exceptAll both ways), on bags with
+    duplicate keys on both sides, NULL keys, one-sided keys, keys with
+    more copies on either side, rows in both bags and rows in neither."""
+    from bangdatapipeline_spark.operators.setops import multiset_ops
+
+    rows = [
+        (1, True, False), (1, True, False), (1, True, True),     # more in A
+        (2, True, False), (2, False, True), (2, True, True),
+        (2, False, True), (2, False, True),                      # more in B
+        (3, True, False),                                        # only A
+        (4, False, True), (4, False, True),                      # only B
+        (None, True, False), (None, True, None), (None, False, True),
+        (7, True, True), (7, True, True),                        # equal
+        (8, False, False), (9, None, None),                      # in neither
+    ]
+    df = spark.createDataFrame(rows, "k int, a boolean, b boolean")
+    got = multiset_ops(df, "k", F.col("a"), F.col("b"))
+    a = df.filter("a").select("k")
+    b = df.filter("b").select("k")
+    native = {
+        "intersect": a.intersect(b),
+        "except": a.subtract(b),
+        "intersect_all": a.intersectAll(b),
+        "except_all": a.exceptAll(b),
+    }
+    for op, want in native.items():
+        mine = got.filter(F.col("op") == op).select("k")
+        assert mine.exceptAll(want).count() == 0 == want.exceptAll(mine).count(), (
+            op,
+            sorted(map(str, mine.collect())),
+            sorted(map(str, want.collect())),
+        )
