@@ -24,8 +24,6 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
@@ -50,14 +48,13 @@ def _size_gated_broadcast(df: DataFrame) -> DataFrame:
     """Broadcast-hint ``df`` only when Catalyst's own plan-stats estimate
     fits the gate. The estimate (`optimizedPlan().stats().sizeInBytes`)
     is pure planning — no job runs — and is exact for materialized cached
-    relations, file-size-derived for scans. Gate override for tests /
-    clusters via ``BDP_BROADCAST_MAX_BYTES``."""
-    limit = int(os.environ.get("BDP_BROADCAST_MAX_BYTES", _BROADCAST_MAX_BYTES))
+    relations, file-size-derived for scans. The gate is the module
+    constant ``_BROADCAST_MAX_BYTES``."""
     try:
         size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:  # stats unavailable -> assume too big, stay shuffled
-        size = limit + 1
-    return F.broadcast(df) if size <= limit else df
+        return df
+    return F.broadcast(df) if size <= _BROADCAST_MAX_BYTES else df
 
 
 # --------------------------------------------------------------------------
@@ -1460,6 +1457,12 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CC_COND = "l_quantity = 50 AND l_discount >= 0.08"
 
 
+# Round bound of the alternating-star loop, which takes O(log n) rounds
+# in practice; a graph that has not converged by then raises instead of
+# returning unconverged stars.
+_CC_MAX_ROUNDS = 30
+
+
 @register(
     "graph_cc_alternating",
     oracle=f"""
@@ -1565,7 +1568,7 @@ def graph_cc_alternating(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     prev_sig = None
-    for _ in range(30):
+    for _ in range(_CC_MAX_ROUNDS):
         edges = small_star(large_star(edges)).localCheckpoint(eager=True)
         sig = tuple(
             edges.agg(
@@ -1575,6 +1578,10 @@ def graph_cc_alternating(spark: SparkSession, sf_dir: str) -> DataFrame:
         if sig == prev_sig:
             break
         prev_sig = sig
+    else:
+        raise RuntimeError(
+            f"graph_cc_alternating did not converge in {_CC_MAX_ROUNDS} rounds"
+        )
 
     # fixpoint edges are (root, child) stars. Every input node is still
     # an endpoint here: both star ops re-emit every node each round

@@ -64,9 +64,6 @@ def get_spark(app_name: str = "bangdatapipeline_spark", cpus: str | None = None)
     builder = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", "32")
         # local mode runs all executor threads inside the driver JVM, so
         # this IS the executor heap. Measured across heap/collector
         # combinations on the full 115-query bench prefix: G1 at 48g
@@ -82,7 +79,6 @@ def get_spark(app_name: str = "bangdatapipeline_spark", cpus: str | None = None)
         # capping SQL-UI retention keeps listener state from becoming
         # old-gen ballast (the UI itself is disabled anyway)
         .config("spark.sql.ui.retainedExecutions", "25")
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
         # static config, settable only at session build: saveAsTable targets
         # (bucketing demos) land in tmp, never in the repo working dir

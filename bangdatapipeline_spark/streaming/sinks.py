@@ -1,17 +1,29 @@
-"""Streaming sinks: exactly-once parquet output via foreachBatch.
+"""Streaming sinks: ``foreachBatch`` writes that are idempotent per batch id.
 
-Structured Streaming's file sink is append-only; for sinks that need
-upsert/merge or transactional rewrite the standard pattern is
-``foreachBatch`` + idempotent-by-batchId writes: each micro-batch lands in
-its own ``batch_id=N`` directory with overwrite mode, so a replayed batch
-(failure between write and checkpoint commit) overwrites its own earlier
-attempt instead of duplicating rows. Combined with the checkpoint, the
-sink is effectively exactly-once end to end.
+Structured Streaming's file sink is append-only; a sink that must upsert,
+merge or rewrite transactionally runs its write in ``foreachBatch``, whose
+contract is "(batch_df, batch_id), called once per micro-batch, replays
+possible, same batch_id on replay". Every sink here therefore writes under
+a name derived from the batch id alone, so a replayed batch (failure
+between write and checkpoint commit) overwrites its own earlier attempt
+instead of duplicating rows. With the checkpoint, each sink is
+exactly-once end to end. The writes take one of two shapes:
+
+* **Per-batch directory** (``exactly_once_parquet_sink``): batch N lands
+  in its own ``batch_id=N`` directory with overwrite mode.
+* **Versioned fold** (the state sinks): batch N is reduced to a mergeable
+  ``delta``, folded with the newest state version strictly older than N,
+  and written as ``v{N:05d}``; for batch N with no prior state the delta
+  is the state. Because the prior version is chosen by batch id, not by
+  what is newest on disk, a replayed batch merges onto the state it saw
+  the first time and rewrites its own version with the same rows. The
+  read side (``read_state``) takes the newest version. Each state sink
+  contributes only its algebra: a ``delta`` of one batch, and a ``fold``
+  that re-reduces the union of the prior state and that delta.
 
 At cluster scale the same hook is where MERGE INTO (Delta/Iceberg) or a
-JDBC transactional upsert goes — the contract foreachBatch gives is
-"(batch_df, batch_id), called once per micro-batch, replays possible,
-same batch_id on replay".
+JDBC transactional upsert goes; ``txn_table_merge_sink`` is that shape
+against the engine's own transactional table.
 """
 
 from __future__ import annotations
@@ -23,35 +35,49 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 
-def exactly_once_parquet_sink(df: DataFrame, target: str | None = None):
-    """Start a streaming write of ``df`` where each micro-batch overwrites
-    its own ``batch_id=N`` partition directory. Returns (query, target).
+def _tmp(prefix: str) -> str:
+    return os.path.join(tempfile.gettempdir(), f"{prefix}_{uuid.uuid4().hex[:8]}")
 
-    Idempotence: re-delivery of batch N rewrites batch_id=N in place —
-    asserted in tests by invoking the batch function twice with the same
-    id.
-    """
-    target = target or os.path.join(
-        tempfile.gettempdir(), f"eo_sink_{uuid.uuid4().hex[:8]}"
-    )
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.write.mode("overwrite")
-            .parquet(os.path.join(target, f"batch_id={batch_id}"))
-        )
-
-    q = (
-        df.writeStream.foreachBatch(write_batch)
-        .option(
-            "checkpointLocation",
-            os.path.join(tempfile.gettempdir(), f"ckpt_eo_{uuid.uuid4().hex[:8]}"),
-        )
+def _start(stream: DataFrame, body, tag: str):
+    """Run ``body(batch_df, batch_id)`` on each micro-batch of ``stream``
+    until the input available now is consumed, checkpointing to a fresh
+    temp directory. Returns the query."""
+    return (
+        stream.writeStream.foreachBatch(body)
+        .option("checkpointLocation", _tmp(f"ckpt_{tag}"))
         .outputMode("append")
         .trigger(availableNow=True)
         .start()
     )
-    return q, target
+
+
+def _versioned_state_sink(stream: DataFrame, tag: str, delta, fold, target: str | None):
+    """The versioned fold: ``v{N}`` = ``delta(batch)`` without prior state,
+    else ``fold(prior.unionByName(delta(batch)))``. Returns (query, target)."""
+    target = target or _tmp(f"{tag}_state")
+    os.makedirs(target, exist_ok=True)
+
+    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+        d = delta(batch_df)
+        prior = _latest_state(batch_df.sparkSession, target, batch_id)
+        merged = d if prior is None else fold(prior.unionByName(d))
+        merged.write.mode("overwrite").parquet(os.path.join(target, f"v{batch_id:05d}"))
+
+    return _start(stream, merge_batch, tag), target
+
+
+def exactly_once_parquet_sink(df: DataFrame, target: str | None = None):
+    """Start a streaming write of ``df`` where each micro-batch overwrites
+    its own ``batch_id=N`` partition directory. Returns (query, target)."""
+    target = target or _tmp("eo_sink")
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.write.mode("overwrite").parquet(
+            os.path.join(target, f"batch_id={batch_id}")
+        )
+
+    return _start(df, write_batch, "eo"), target
 
 
 def read_sink(spark: SparkSession, target: str) -> DataFrame:
@@ -63,28 +89,20 @@ def read_sink(spark: SparkSession, target: str) -> DataFrame:
 
 def incremental_state_merge_sink(df: DataFrame, key_cols: list[str], target: str | None = None):
     """Streaming materialized-view maintenance: each micro-batch is
-    partial-aggregated and MERGED into a versioned aggregate-state table
-    — the streaming twin of ``operators.incremental.incremental_agg_merge``.
+    partial-aggregated and merged into the aggregate state — the
+    streaming twin of ``operators.incremental.incremental_agg_merge``.
 
     The state schema is the mergeable form (n_orders / revenue /
     first_order / last_order per key): every column merges with
     sum/sum/min/max, so folding batch partials into state is the same
-    union + re-aggregate the batch operator uses. State versions are
-    written as ``v{batch_id}`` directories and the latest pointer moves
-    only after the write succeeds — a replayed batch rewrites its own
-    version (idempotent), mirroring the exactly-once sink's contract. At
-    cluster scale this foreachBatch body is the MERGE INTO statement of
-    a Delta/Iceberg table partitioned by month, touching only the
-    partitions present in the delta.
+    union + re-aggregate the batch operator uses. At cluster scale this
+    foreachBatch body is the MERGE INTO statement of a Delta/Iceberg
+    table partitioned by month, touching only the partitions present in
+    the delta.
     """
     import pyspark.sql.functions as F
 
-    target = target or os.path.join(
-        tempfile.gettempdir(), f"ivm_state_{uuid.uuid4().hex[:8]}"
-    )
-    os.makedirs(target, exist_ok=True)
-
-    def agg(batch_df: DataFrame) -> DataFrame:
+    def delta(batch_df: DataFrame) -> DataFrame:
         return batch_df.groupBy(*key_cols).agg(
             F.count(F.lit(1)).alias("n_orders"),
             F.round(F.sum("o_totalprice"), 2).alias("revenue"),
@@ -92,33 +110,15 @@ def incremental_state_merge_sink(df: DataFrame, key_cols: list[str], target: str
             F.max("o_orderdate").alias("last_order"),
         )
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        delta = agg(batch_df)
-        prior = _latest_state(spark, target, batch_id)
-        merged = delta if prior is None else (
-            prior.unionByName(delta)
-            .groupBy(*key_cols)
-            .agg(
-                F.sum("n_orders").alias("n_orders"),
-                F.round(F.sum("revenue"), 2).alias("revenue"),
-                F.min("first_order").alias("first_order"),
-                F.max("last_order").alias("last_order"),
-            )
+    def fold(state: DataFrame) -> DataFrame:
+        return state.groupBy(*key_cols).agg(
+            F.sum("n_orders").alias("n_orders"),
+            F.round(F.sum("revenue"), 2).alias("revenue"),
+            F.min("first_order").alias("first_order"),
+            F.max("last_order").alias("last_order"),
         )
-        merged.write.mode("overwrite").parquet(os.path.join(target, f"v{batch_id:05d}"))
 
-    q = (
-        df.writeStream.foreachBatch(merge_batch)
-        .option(
-            "checkpointLocation",
-            os.path.join(tempfile.gettempdir(), f"ckpt_ivm_{uuid.uuid4().hex[:8]}"),
-        )
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, target
+    return _versioned_state_sink(df, "ivm", delta, fold, target)
 
 
 def incremental_join_view_sink(
@@ -135,8 +135,7 @@ def incremental_join_view_sink(
     join: only the delta shuffles; at cluster scale the static side is
     bucketed on the join key so the probe co-locates), partial-aggregates
     to the view's SUPPORTING grain ``(o_orderpriority, o_orderkey)``,
-    and merges into versioned state by sum — the same v{batch_id}
-    replay-idempotence contract as ``incremental_state_merge_sink``.
+    and merges into the state by sum.
 
     The supporting grain exists because ``count(DISTINCT o_orderkey)``
     is NOT mergeable from per-priority partials; keeping one state row
@@ -147,15 +146,10 @@ def incremental_join_view_sink(
     """
     import pyspark.sql.functions as F
 
-    target = target or os.path.join(
-        tempfile.gettempdir(), f"ivm_join_{uuid.uuid4().hex[:8]}"
-    )
-    os.makedirs(target, exist_ok=True)
     keys = ["o_orderpriority", "o_orderkey"]
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        delta = (
+    def delta(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.join(
                 static_side, batch_df["l_orderkey"] == static_side["o_orderkey"]
             )
@@ -165,44 +159,25 @@ def incremental_join_view_sink(
                 F.sum("cents").alias("cents"),
             )
         )
-        prior = _latest_state(spark, target, batch_id)
-        merged = delta if prior is None else (
-            prior.unionByName(delta)
-            .groupBy(*keys)
-            .agg(
-                F.sum("n_rows").alias("n_rows"),
-                F.sum("cents").alias("cents"),
-            )
-        )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(target, f"v{batch_id:05d}")
+
+    def fold(state: DataFrame) -> DataFrame:
+        return state.groupBy(*keys).agg(
+            F.sum("n_rows").alias("n_rows"),
+            F.sum("cents").alias("cents"),
         )
 
-    q = (
-        delta_stream.writeStream.foreachBatch(merge_batch)
-        .option(
-            "checkpointLocation",
-            os.path.join(tempfile.gettempdir(), f"ckpt_ivmj_{uuid.uuid4().hex[:8]}"),
-        )
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, target
+    return _versioned_state_sink(delta_stream, "ivm_join", delta, fold, target)
 
 
 def cdc_merge_sink(changelog_stream: DataFrame, target: str | None = None):
     """Streaming CDC state maintenance with DELETE tombstones — the
     streaming twin of ``operators.curation.merge_cdc_with_deletes``.
 
-    Each micro-batch compacts its changelog rows latest-wins per key and
-    merges them into the versioned per-key state (keeping whichever row
-    is later in the (ts_us, event_id) total order across batches — so
-    arrival order across micro-batches cannot change the outcome). The
-    state row carries the tombstone flag; the DELETE is applied at
-    READ time (``cdc_merge_result``), exactly how table formats defer
-    deletes to scan-time via delete vectors. Same v{batch_id}
-    replay-idempotence contract as the other versioned sinks.
+    Delta and fold are one latest-wins compaction per key in the
+    (ts_us, event_id) total order, so arrival order across micro-batches
+    cannot change the outcome. The state row carries the tombstone flag;
+    the DELETE is applied at READ time (``cdc_merge_result``), exactly
+    how table formats defer deletes to scan-time via delete vectors.
 
     Expects changelog columns: user_id, value, is_delete, ts_us,
     event_id.
@@ -210,43 +185,18 @@ def cdc_merge_sink(changelog_stream: DataFrame, target: str | None = None):
     import pyspark.sql.functions as F
     from pyspark.sql import Window
 
-    target = target or os.path.join(
-        tempfile.gettempdir(), f"cdc_state_{uuid.uuid4().hex[:8]}"
+    w = Window.partitionBy("user_id").orderBy(
+        F.col("ts_us").desc(), F.col("event_id").desc()
     )
-    os.makedirs(target, exist_ok=True)
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        w = Window.partitionBy("user_id").orderBy(
-            F.col("ts_us").desc(), F.col("event_id").desc()
-        )
-        delta = (
-            batch_df.withColumn("rn", F.row_number().over(w))
+    def latest(df: DataFrame) -> DataFrame:
+        return (
+            df.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select("user_id", "value", "is_delete", "ts_us", "event_id")
         )
-        prior = _latest_state(spark, target, batch_id)
-        merged = delta if prior is None else (
-            prior.unionByName(delta)
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(target, f"v{batch_id:05d}")
-        )
 
-    q = (
-        changelog_stream.writeStream.foreachBatch(merge_batch)
-        .option(
-            "checkpointLocation",
-            os.path.join(tempfile.gettempdir(), f"ckpt_cdc_{uuid.uuid4().hex[:8]}"),
-        )
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, target
+    return _versioned_state_sink(changelog_stream, "cdc", latest, latest, target)
 
 
 def snapshot_accumulate_sink(snapshot_stream: DataFrame, target: str | None = None):
@@ -254,14 +204,11 @@ def snapshot_accumulate_sink(snapshot_stream: DataFrame, target: str | None = No
     twin of ``operators.incremental.cdc_snapshot_diff``'s B side.
 
     A warehouse that only takes periodic full dumps receives version B
-    as a multi-file drop; each micro-batch is one slice. The foreachBatch
-    body merges the slice into the previous micro-batch's state table
-    latest-wins per key on ``_ord`` (so a re-dumped key resolves to its
-    newest revision), committed as ``v{batch_id}`` for replay idempotence
-    — a re-delivered batch overwrites its own version against the state
-    it saw the first time, same contract as the other versioned sinks.
-    The A-vs-B classify + rollup runs READ-side over the final state
-    (``snapshot_diff_result``), because the diff needs B complete.
+    as a multi-file drop; each micro-batch is one slice. Delta and fold
+    are one latest-wins compaction per key on ``_ord``, so a re-dumped
+    key resolves to its newest revision. The A-vs-B classify + rollup
+    runs READ-side over the final state (``snapshot_diff_result``),
+    because the diff needs B complete.
 
     Expects columns: key, cents_b, _ord. At 100 TB the state table is a
     key-bucketed transactional table and each merge rewrites only the
@@ -271,47 +218,22 @@ def snapshot_accumulate_sink(snapshot_stream: DataFrame, target: str | None = No
     import pyspark.sql.functions as F
     from pyspark.sql import Window
 
-    target = target or os.path.join(
-        tempfile.gettempdir(), f"snap_state_{uuid.uuid4().hex[:8]}"
+    # cents_b as a deterministic secondary sort key (ADVICE r7): if a
+    # prior-state row and a slice row ever share an _ord for the same
+    # key with different payloads, _ord-only row_number would keep a
+    # nondeterministic winner; the payload tie-break pins it.
+    w = Window.partitionBy("key").orderBy(
+        F.col("_ord").desc(), F.col("cents_b").desc()
     )
-    os.makedirs(target, exist_ok=True)
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # cents_b as a deterministic secondary sort key (ADVICE r7): if a
-        # prior-state row and a slice row ever share an _ord for the same
-        # key with different payloads, _ord-only row_number would keep a
-        # nondeterministic winner; the payload tie-break pins it.
-        w = Window.partitionBy("key").orderBy(
-            F.col("_ord").desc(), F.col("cents_b").desc()
-        )
-        delta = (
-            batch_df.withColumn("rn", F.row_number().over(w))
+    def latest(df: DataFrame) -> DataFrame:
+        return (
+            df.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select("key", "cents_b", "_ord")
         )
-        prior = _latest_state(spark, target, batch_id)
-        merged = delta if prior is None else (
-            prior.unionByName(delta)
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(target, f"v{batch_id:05d}")
-        )
 
-    q = (
-        snapshot_stream.writeStream.foreachBatch(merge_batch)
-        .option(
-            "checkpointLocation",
-            os.path.join(tempfile.gettempdir(), f"ckpt_snap_{uuid.uuid4().hex[:8]}"),
-        )
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, target
+    return _versioned_state_sink(snapshot_stream, "snap", latest, latest, target)
 
 
 def cdc_merge_result(base: DataFrame, state: DataFrame, key_shift: int) -> DataFrame:
@@ -356,7 +278,7 @@ def join_view_result(state: DataFrame) -> DataFrame:
     )
 
 
-def _latest_state(spark: SparkSession, target: str, before_batch: int):
+def _latest_state(spark: SparkSession, target: str, before_batch: float):
     """Newest committed state version strictly older than ``before_batch``
     (a replayed batch must merge onto the state it saw the first time)."""
     versions = sorted(
@@ -369,12 +291,11 @@ def _latest_state(spark: SparkSession, target: str, before_batch: int):
 
 
 def read_state(spark: SparkSession, target: str) -> DataFrame:
-    """Read the latest committed aggregate state."""
-    versions = sorted(
-        int(d[1:]) for d in os.listdir(target)
-        if d.startswith("v") and d[1:].isdigit()
-    )
-    return spark.read.parquet(os.path.join(target, f"v{versions[-1]:05d}"))
+    """Read the latest committed state version."""
+    state = _latest_state(spark, target, float("inf"))
+    if state is None:
+        raise FileNotFoundError(f"no committed state version under {target}")
+    return state
 
 
 def txn_table_merge_sink(changelog_stream: DataFrame, table, app_id: str = "stream"):
@@ -383,40 +304,28 @@ def txn_table_merge_sink(changelog_stream: DataFrame, table, app_id: str = "stre
     CDC/MERGE family, and the streaming twin of ``txn_cdc_merge_table``.
 
     Each micro-batch MERGEs with ``version=batch_id``: the table's
-    (app_id, version) transaction stamp turns foreachBatch's
-    at-least-once replay contract into exactly-once — a re-delivered
-    batch is a logged no-op, no ``v{batch_id}`` directory convention
-    needed. Batch ids are monotone, so versions are too; within a batch
-    the merge compacts latest-wins on (ts_us, event_id), and across
-    batches the stream's time order makes last-batch-wins equal the
-    one-shot merge.
+    (app_id, version) transaction stamp makes a re-delivered batch a
+    logged no-op, so this sink needs no versioned state directory.
+    Batch ids are monotone, so versions are too; within a batch the
+    merge compacts latest-wins on (ts_us, event_id), and across batches
+    the stream's time order makes last-batch-wins equal the one-shot
+    merge. Returns the query.
     """
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        table.merge_cdc(batch_df, app_id=app_id, version=batch_id)
+        if not batch_df.isEmpty():
+            table.merge_cdc(batch_df, app_id=app_id, version=batch_id)
 
-    q = (
-        changelog_stream.writeStream.foreachBatch(merge_batch)
-        .option(
-            "checkpointLocation",
-            os.path.join(tempfile.gettempdir(), f"ckpt_txn_{uuid.uuid4().hex[:8]}"),
-        )
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q
+    return _start(changelog_stream, merge_batch, "txn")
 
 
 def postings_index_sink(df: DataFrame, target: str | None = None):
     """Streaming inverted-index maintenance: each micro-batch of NEW
     documents is reduced to per-term partials — (df_delta, the batch's
-    min-20 doc_ids) plus a 1-row doc-count partial — and MERGED into the
-    versioned index state. The streaming twin of ``text_postings``.
+    min-20 doc_ids) plus a 1-row doc-count partial — and merged into the
+    index state. The streaming twin of ``text_postings``.
 
-    The merge is a pure monoid fold, which is what makes the index
+    The fold is a pure monoid, which is what makes the index
     incrementally maintainable at all: document frequency is additive
     over disjoint doc sets, and the rank-capped posting list is a MIN-20
     (min-20 of a union = min-20 of the two sides' min-20s), so folding
@@ -424,8 +333,7 @@ def postings_index_sink(df: DataFrame, target: str | None = None):
     build. The relative df band is deliberately NOT applied to state —
     it depends on the final corpus size, so it is a read-side projection
     (``postings_result``) over the bounded per-term state, exactly like
-    the other monitors' read-side split. Versioned ``v{batch_id}``
-    writes + latest-pointer semantics give idempotent replay.
+    the other monitors' read-side split.
     """
     import pyspark.sql.functions as F
 
@@ -436,12 +344,7 @@ def postings_index_sink(df: DataFrame, target: str | None = None):
         _BIGRAM_GEN_EXPR, _POSTINGS_CAP,
     )
 
-    target = target or os.path.join(
-        tempfile.gettempdir(), f"postings_state_{uuid.uuid4().hex[:8]}"
-    )
-    os.makedirs(target, exist_ok=True)
-
-    def delta_index(batch_df: DataFrame) -> DataFrame:
+    def delta(batch_df: DataFrame) -> DataFrame:
         toks = batch_df.selectExpr("doc_id", "split(text, ' ') AS toks")
         # the batch operator's generator expression, imported — the
         # stream-equals-batch invariant requires byte-identical bigrams
@@ -457,37 +360,15 @@ def postings_index_sink(df: DataFrame, target: str | None = None):
         )
         return per_term.unionByName(n)
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        delta = delta_index(batch_df)
-        prior = _latest_state(spark, target, batch_id)
-        merged = delta if prior is None else (
-            prior.unionByName(delta)
-            .groupBy("term")
-            .agg(
-                F.sum("df").alias("df"),
-                F.slice(
-                    F.array_sort(F.flatten(F.collect_list("ids"))), 1, _POSTINGS_CAP
-                ).alias("ids"),
-            )
-        )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(target, f"v{batch_id:05d}")
+    def fold(state: DataFrame) -> DataFrame:
+        return state.groupBy("term").agg(
+            F.sum("df").alias("df"),
+            F.slice(
+                F.array_sort(F.flatten(F.collect_list("ids"))), 1, _POSTINGS_CAP
+            ).alias("ids"),
         )
 
-    q = (
-        df.writeStream.foreachBatch(merge_batch)
-        .option(
-            "checkpointLocation",
-            os.path.join(
-                tempfile.gettempdir(), f"ckpt_postings_{uuid.uuid4().hex[:8]}"
-            ),
-        )
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, target
+    return _versioned_state_sink(df, "postings", delta, fold, target)
 
 
 def postings_result(spark: SparkSession, target: str) -> DataFrame:

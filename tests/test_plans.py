@@ -449,7 +449,9 @@ def test_triangle_adjacency_broadcast_is_size_gated(spark, sf_dir, monkeypatch):
     node key (the 100 TB fallback). Forcing the gate to 0 simulates a
     too-big adjacency; same operators, same oracles, different join
     strategy only."""
-    monkeypatch.setenv("BDP_BROADCAST_MAX_BYTES", "0")
+    from bangdatapipeline_spark.operators import graph_analytics
+
+    monkeypatch.setattr(graph_analytics, "_BROADCAST_MAX_BYTES", 0)
     # also suppress Catalyst's stats-based auto-broadcast: at survey scale
     # the (materialized, cached) adjacency is tiny enough that Catalyst
     # would broadcast it even WITHOUT the hint — at the simulated scale its

@@ -707,6 +707,18 @@ def test_bloom_prefilter_is_sound_and_audited(spark, sf_dir):
         assert 0.0 <= r.fp_rate <= 1.0
 
 
+def test_cc_alternating_fails_loudly_when_unconverged(spark, monkeypatch):
+    """An alternating-star loop cut short by its round bound raises
+    instead of returning stars that are not yet components."""
+    import pytest
+
+    from bangdatapipeline_spark.operators import graph_analytics
+
+    monkeypatch.setattr(graph_analytics, "_CC_MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        REGISTRY["graph_cc_alternating"].fn(spark, "/root/testdata/sf0.001")
+
+
 def test_cc_alternating_agrees_with_label_propagation_partitioning(spark, sf_dir):
     """Alternating-star CC must be partition-invariant and its component
     partition must be consistent: node counts sum to the node total and

@@ -441,6 +441,18 @@ def test_cdc_merge_with_deletes_stream_equals_batch(spark):
         # so the merge-audit shows them only as suppressed no-ops)
         st = sinks.read_state(spark, target)
         assert st.filter("is_delete").count() > 0
+
+        # re-delivery: the same chunks again into the same target, through
+        # a fresh checkpoint (batch ids restart at 0), leave the read side
+        # unchanged
+        q2, _ = sinks.cdc_merge_sink(replay.read_stream(spark, d), target=target)
+        q2.awaitTermination()
+        out2 = sinks.cdc_merge_result(
+            base, sinks.read_state(spark, target), CDC_KEY_SHIFT
+        )
+        assert {
+            r.key: (r.name, r.acctbal, r.merge_action) for r in out2.collect()
+        } == got
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
@@ -520,6 +532,28 @@ def test_cdc_merge_upsert_stream_equals_batch(spark):
         assert "deleted" not in {a for (_, _, a) in got.values()}
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+def test_sinks_share_one_start_and_one_versioned_write():
+    """Every sink starts its query through ``sinks._start`` and every
+    versioned-state sink commits through ``sinks._versioned_state_sink``:
+    the module holds exactly one ``.writeStream`` access and exactly one
+    ``v{batch_id:05d}`` write, so the per-batch contract is stated once."""
+    import ast
+
+    from bangdatapipeline_spark.streaming import sinks
+
+    tree = ast.parse(open(sinks.__file__).read())
+    write_streams = [
+        n for n in ast.walk(tree)
+        if isinstance(n, ast.Attribute) and n.attr == "writeStream"
+    ]
+    version_names = [
+        n for n in ast.walk(tree)
+        if isinstance(n, ast.JoinedStr) and ast.unparse(n) == "f'v{batch_id:05d}'"
+    ]
+    assert len(write_streams) == 1, [n.lineno for n in write_streams]
+    assert len(version_names) == 1, [n.lineno for n in version_names]
 
 
 def test_stream_twin_registry_is_complete_and_tested():
@@ -772,6 +806,15 @@ def test_postings_stream_equals_batch(spark):
             for r in REGISTRY["text_postings"].fn(spark, SF).collect()
         }
         assert got == want
+
+        # re-delivery: the same chunks again into the same target, through
+        # a fresh checkpoint (batch ids restart at 0), leave the index as is
+        q2, _ = sinks.postings_index_sink(replay.read_stream(spark, d), target=target)
+        q2.awaitTermination()
+        assert {
+            r.term: (r.df, r.postings)
+            for r in sinks.postings_result(spark, target).collect()
+        } == got
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
